@@ -517,31 +517,3 @@ def decode_count(data: bytes, encoding: str) -> tuple[str, int]:
         if "\r" in text:
             text = text.replace("\r\n", "\n").replace("\r", "\n")
         return text, _DECODE_ERR_TL.n
-
-
-def encoding_compatible_prefix(data: bytes, old: str, new: str, upto: int) -> bool:
-    """True when re-decoding is unnecessary after a mid-parse encoding change:
-    the consumed prefix decodes identically under both encodings (the
-    reference's ASCII fast path, /root/reference/lib/Parser/Data.php:355-369).
-    """
-    prefix = data[:upto]
-    if old in _PY_CODEC and new in _PY_CODEC and prefix.isascii():
-        # every WHATWG single/multi-byte encoding here is ASCII-compatible
-        # except the utf-16 family and iso-2022-jp
-        non_ascii_compat = {"utf-16be", "utf-16le", "iso-2022-jp", "replacement"}
-        if old not in non_ascii_compat and new not in non_ascii_compat:
-            return True
-    try:
-        return decode(prefix, old) == decode(prefix, new)
-    except Exception:
-        return False
-
-
-def has_codec(encoding: str) -> bool:
-    if encoding in ("replacement", "x-user-defined"):
-        return True
-    try:
-        codecs.lookup(_PY_CODEC.get(encoding, encoding))
-        return True
-    except LookupError:
-        return False

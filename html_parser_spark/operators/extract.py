@@ -1,5 +1,6 @@
 """The flagship operator: WHATWG parse + text extraction over Arrow
-batches of raw html bytes.
+batches of raw html bytes, and the shared kernel every HTML operator
+runs on.
 
 Equivalent reference surface: ``Parser::parse`` + body ``textContent``
 (/root/reference/lib/Parser.php:49-142, README.md:138-147). The whole
@@ -8,32 +9,53 @@ Python call per document (the stages are coupled by feedback loops —
 SURVEY.md §3.4 — so they fuse into a single kernel), applied across an
 Arrow batch under ``mapInPandas``.
 
+One kernel, many operators. Each HTML operator here and in
+``operators/links.py`` is a per-document function plus its output
+schema; :func:`_page_kernel` is the one batch loop that runs them, and
+:func:`_map_pages` the one ``mapInPandas`` call. The kernel owns column
+pruning, NULL html → ``b""``, the byte cap, per-document failure
+isolation, the GC policy and the lineage columns, so each of those is
+written once and holds for every operator alike.
+
 Scale notes (100 TB / 10^12 docs):
 
 - **Arrow batch sizing.** Cells are whole html documents (KBs-MBs), so
   the default 10k-rows-per-batch would make multi-GB batches. Callers
   must set ``spark.sql.execution.arrow.maxRecordsPerBatch`` to ~64-128
   (done in ``plans.pipeline.configure``).
-- **Bounded memory.** Per-document work is O(doc size); ``max_html_bytes``
-  hard-caps pathological documents (they are truncated at a cap and
-  flagged, never parsed unbounded).
+- **Bounded memory.** Per-document work is O(doc size), and the kernel
+  hard-caps every document at ``max_html_bytes`` (64 MiB unless the
+  operator takes the kwarg) before any operator sees it: pathological
+  documents are truncated at the cap, never parsed unbounded. Where the
+  schema has ``truncated`` and ``html_bytes`` columns the cut is
+  flagged and the parsed size reported.
+- **GC per batch, not per allocation.** The DOM has parent↔child
+  cycles, so the cyclic collector would otherwise run continuously
+  during parse. The kernel disables it for its generator's
+  lifetime, runs one ``gc.collect()`` after each yielded batch (the
+  garbage is bounded: one batch's DOMs) and re-enables it when the
+  generator closes.
 - **Counters, not lists.** Parse errors become per-doc counts plus
   per-partition counter rows; full error tuples never leave the executor
   (the reference gates error collection the same way for performance —
   /root/reference/lib/Parser/Data.php:56-57).
-- **Lineage.** Every output row carries the executor partition id and a
-  batch sequence number, so a resumed/retried run can be audited
-  per-partition (north_rule: "per-partition lineage + metrics").
+- **Lineage.** Every ``extract_pages`` row carries the executor
+  partition id and a batch sequence number, so a resumed/retried run can
+  be audited per-partition (north_rule: "per-partition lineage +
+  metrics").
 """
 
 from __future__ import annotations
 
+import gc
+import re
 from collections.abc import Iterator
 
 import pandas as pd
 
 from ..engine import parse, extract_text, serialize
-from ..engine.extractor import extract_body_text
+from ..engine.extractor import (extract_body_text, extract_main_text,
+                                extract_tables)
 
 EXTRACT_SCHEMA = (
     "url string, text string, "
@@ -47,86 +69,93 @@ LINKS_COL_SCHEMA = ("links array<struct<href:string,target:string,"
                     "anchor:string>>")
 
 
-def parse_extract_batch(pdf: pd.DataFrame, part_id: int, batch_seq: int,
-                        max_html_bytes: int, max_spans: int,
-                        with_spans: bool,
-                        transport_col: str | None = None,
-                        preprocess=None,
-                        with_links: bool = False,
-                        max_links: int = 10_000) -> pd.DataFrame:
-    """Parse+extract one Arrow batch (pure pandas-in/pandas-out).
-    ``transport_col`` names an optional per-row Content-Type charset
-    column (the crawl's HTTP header) fed into the sniff ladder as the
-    transport layer (Charset::fromTransport semantics).
-    ``preprocess`` is an optional ``bytes -> bytes`` hook applied before
-    the cap/parse (decompression of gzip-transfer-encoded crawl
-    payloads — use ``bounded_zlib(max_html_bytes)``, NOT bare
-    ``zlib.decompress``: the cap below runs after the hook, so an
-    unbounded decompressor would let a deflate bomb blow the worker's
-    memory before the cap sees it); unlike the parse itself — which
-    never raises on any byte input — decompression of corrupt payloads
-    genuinely can, and such rows take the failure arm
-    (``encoding='error', n_errors=-1``) without failing the task."""
-    out = {k: [] for k in ("url", "text", "spans", "encoding", "quirks_mode",
-                           "n_errors", "n_tokens", "n_elements",
-                           "html_bytes", "truncated")}
-    if with_links:
-        from urllib.parse import urljoin
+# columns the kernel fills itself wherever an operator's schema has them
+_KERNEL_COLS = ("url", "html_bytes", "truncated", "part_id", "batch_seq")
 
-        from .links import harvest_anchors
-        out["links"] = []
-    transports = (pdf[transport_col] if transport_col is not None
-                  else [None] * len(pdf))
-    for url, html, tc in zip(pdf["url"], pdf["html"], transports):
-        raw = bytes(html) if html is not None else b""
-        truncated = False
+
+def _field_names(schema: str) -> list[str]:
+    """Top-level column names of a DDL schema string."""
+    flat = schema
+    while "<" in flat:  # drop nested type parameters, innermost first
+        flat = re.sub(r"<[^<>]*>", "", flat)
+    return [f.split()[0] for f in flat.split(",")]
+
+
+def _partition_id() -> int:
+    try:  # absent when the kernel runs on bare pandas
+        from pyspark import TaskContext
+        tc = TaskContext.get()
+        return tc.partitionId() if tc is not None else -1
+    except Exception:
+        return -1
+
+
+def _page_kernel(schema: str, per_doc, fail: tuple | None = None,
+                 max_html_bytes: int = 64 * 1024 * 1024, preprocess=None):
+    """The ``mapInPandas`` function shared by every HTML operator: pure
+    pandas in and out, so it also runs on local frames without Spark.
+
+    Input batches are (url, html, ...) rows. Per document: NULL html
+    becomes ``b""``, ``preprocess`` (if any) runs, the bytes are capped
+    at ``max_html_bytes``, and ``per_doc(url, raw, row)`` returns the
+    document's output rows (``row`` is the whole input tuple). Each row
+    is a tuple of the schema's columns minus ``_KERNEL_COLS``, in
+    schema order; the kernel adds the url, the parsed size
+    (``html_bytes``), the cap flag (``truncated``) and the lineage
+    (``part_id``, ``batch_seq``) where the schema has those columns. A
+    document whose ``preprocess`` or ``per_doc`` raises yields the row
+    ``fail`` instead, or no row when ``fail`` is None: one bad document
+    never fails the task."""
+    names = _field_names(schema)
+    own = [n for n in names if n not in _KERNEL_COLS]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        part_id = _partition_id()
+        # the GC policy of the module docstring: one collection per Arrow
+        # batch is ~18% faster at 8 workers than collecting during parse
+        gc_was_enabled = gc.isenabled()
+        gc.disable()
         try:
-            if preprocess is not None:
-                raw = preprocess(raw)
-            if max_html_bytes and len(raw) > max_html_bytes:
-                raw, truncated = raw[:max_html_bytes], True
-            o = parse(raw, transport_charset=tc if tc else None)
-            if with_spans:
-                text, spans = extract_text(o.document, max_spans=max_spans)
-            else:
-                text, spans = extract_body_text(o.document), []
-            enc, quirks, nerr = o.encoding, o.quirks_mode, len(o.errors)
-            ntok, nel = o.n_tokens, o.n_elements
-            if with_links:
-                # links ride the SAME parse — one pass over the bytes
-                # yields text AND the edge list (operators/links.py
-                # documents the standalone variant)
-                pairs = harvest_anchors(o.document, max_links=max_links)
-        except Exception:  # never fail the task for one bad document
-            text, spans, enc, quirks, nerr = "", [], "error", 0, -1
-            ntok = nel = 0
-            pairs = []
-        out["url"].append(url)
-        out["text"].append(text)
-        out["spans"].append(
-            [{"path": p, "tag": t, "start": s, "end": e}
-             for (p, t, s, e) in spans] if with_spans else [])
-        out["encoding"].append(enc)
-        out["quirks_mode"].append(quirks)
-        out["n_errors"].append(nerr)
-        out["n_tokens"].append(ntok)
-        out["n_elements"].append(nel)
-        out["html_bytes"].append(len(raw))
-        out["truncated"].append(truncated)
-        if with_links:
-            links = []
-            for href, anchor in pairs:
-                try:
-                    target = urljoin(url, href)
-                except Exception:
-                    target = href
-                links.append({"href": href, "target": target,
-                              "anchor": anchor})
-            out["links"].append(links)
-    res = pd.DataFrame(out)
-    res["part_id"] = part_id
-    res["batch_seq"] = batch_seq
-    return res
+            for seq, pdf in enumerate(batches):
+                rows, urls, sizes, flags = [], [], [], []
+                for row in pdf.itertuples(index=False, name=None):
+                    url, html = row[0], row[1]
+                    raw = bytes(html) if html is not None else b""
+                    truncated = False
+                    try:
+                        if preprocess is not None:
+                            raw = preprocess(raw)
+                        if max_html_bytes and len(raw) > max_html_bytes:
+                            raw, truncated = raw[:max_html_bytes], True
+                        out = per_doc(url, raw, row)
+                    except Exception:  # isolate the bad document
+                        out = [] if fail is None else [fail]
+                    rows += out
+                    urls += [url] * len(out)
+                    sizes += [len(raw)] * len(out)
+                    flags += [truncated] * len(out)
+                cols = dict(zip(own, zip(*rows))) if rows else {}
+                cols.update(url=urls, html_bytes=sizes, truncated=flags,
+                            part_id=[part_id] * len(urls),
+                            batch_seq=[seq] * len(urls))
+                # an empty batch gets object columns, which Arrow casts
+                # to any type (an empty float64 column fails on timestamps)
+                yield pd.DataFrame({n: cols.get(n, ()) for n in names},
+                                   dtype=None if urls else object)
+                gc.collect()
+        finally:
+            if gc_was_enabled:
+                gc.enable()
+
+    return run
+
+
+def _map_pages(pages_df, schema: str, per_doc, fail: tuple | None = None,
+               extra_cols: tuple[str, ...] = (), **kernel):
+    """Column-prune ``pages_df`` to (url, html, *extra_cols) and run
+    :func:`_page_kernel` over it; ``kernel`` takes its cap and hook."""
+    return pages_df.select("url", "html", *extra_cols).mapInPandas(
+        _page_kernel(schema, per_doc, fail, **kernel), schema=schema)
 
 
 def bounded_zlib(max_bytes: int):
@@ -156,35 +185,46 @@ def extract_pages(pages_df, max_html_bytes: int = 64 * 1024 * 1024,
     Column pruning: selects only (url, html) — plus the optional
     per-row transport-charset column — before the UDF so the scan
     never reads columns the kernel doesn't need.
+    ``transport_col`` names an optional per-row Content-Type charset
+    column (the crawl's HTTP header) fed into the sniff ladder as the
+    transport layer (Charset::fromTransport semantics).
+    ``preprocess`` is an optional ``bytes -> bytes`` hook applied before
+    the cap/parse (decompression of gzip-transfer-encoded crawl
+    payloads — use ``bounded_zlib(max_html_bytes)``, NOT bare
+    ``zlib.decompress``: the cap runs after the hook, so an
+    unbounded decompressor would let a deflate bomb blow the worker's
+    memory before the cap sees it); unlike the parse itself — which
+    never raises on any byte input — decompression of corrupt payloads
+    genuinely can, and such rows take the failure arm
+    (``encoding='error', n_errors=-1``) without failing the task.
     """
+    if with_links:
+        from .links import resolve_anchors
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-        try:  # partition id for lineage; absent in bare-pandas tests
-            from pyspark import TaskContext
-            tc = TaskContext.get()
-            part_id = tc.partitionId() if tc is not None else -1
-        except Exception:
-            part_id = -1
-        # the DOM has parent↔child cycles, so the cyclic GC otherwise
-        # runs continuously during parse; one collection per Arrow batch
-        # is ~18% faster at 8 workers (bounded garbage: one batch's DOMs)
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            for seq, pdf in enumerate(batches):
-                yield parse_extract_batch(pdf, part_id, seq, max_html_bytes,
-                                          max_spans, with_spans,
-                                          transport_col, preprocess,
-                                          with_links, max_links)
-                gc.collect()
-        finally:
-            if gc_was_enabled:
-                gc.enable()
+    def per_doc(url, raw, row):
+        o = parse(raw, transport_charset=(row[2] or None)
+                  if transport_col else None)
+        if with_spans:
+            text, spans = extract_text(o.document, max_spans=max_spans)
+            spans = [{"path": p, "tag": t, "start": s, "end": e}
+                     for (p, t, s, e) in spans]
+        else:
+            text, spans = extract_body_text(o.document), []
+        out = (text, spans, o.encoding, o.quirks_mode, len(o.errors),
+               o.n_tokens, o.n_elements)
+        if with_links:
+            # links ride the SAME parse — one pass over the bytes
+            # yields text AND the edge list (operators/links.py
+            # documents the standalone variant)
+            out += ([{"href": h, "target": t, "anchor": a} for h, t, a
+                     in resolve_anchors(o.document, url, max_links)],)
+        return [out]
 
-    cols = ["url", "html"] + ([transport_col] if transport_col else [])
+    fail = ("", [], "error", 0, -1, 0, 0) + (([],) if with_links else ())
     schema = EXTRACT_SCHEMA + (", " + LINKS_COL_SCHEMA if with_links else "")
-    return pages_df.select(*cols).mapInPandas(run, schema=schema)
+    return _map_pages(pages_df, schema, per_doc, fail,
+                      (transport_col,) if transport_col else (),
+                      max_html_bytes=max_html_bytes, preprocess=preprocess)
 
 
 def roundtrip_check(pages_df):
@@ -195,23 +235,13 @@ def roundtrip_check(pages_df):
     /root/reference/lib/Parser/Serializer.php:70-81).
     Returns (url, idempotent boolean)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, ok = [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                raw = bytes(html) if html is not None else b""
-                try:
-                    once = serialize(parse(raw).document)
-                    twice = serialize(parse(once.encode("utf-8"),
-                                            "utf-8").document)
-                    ok.append(once == twice)
-                except Exception:
-                    ok.append(False)
-                urls.append(url)
-            yield pd.DataFrame({"url": urls, "idempotent": ok})
+    def per_doc(url, raw, row):
+        once = serialize(parse(raw).document)
+        twice = serialize(parse(once.encode("utf-8"), "utf-8").document)
+        return [(once == twice,)]
 
-    return pages_df.select("url", "html").mapInPandas(
-        run, schema="url string, idempotent boolean")
+    return _map_pages(pages_df, "url string, idempotent boolean", per_doc,
+                      (False,))
 
 
 POSITIONS_SCHEMA = ("url string, tok_code string, tok_line long, "
@@ -235,27 +265,15 @@ def extract_error_positions(pages_df):
     the production job never enables it.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["url", "tok_code", "tok_line", "tok_col",
-                "tree_code", "tree_line", "tree_col", "n_positions"]
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                raw = bytes(html) if html is not None else b""
-                try:
-                    o = parse(raw, track_positions=True)
-                    pos = o.error_positions
-                    ntk = o.n_tokenizer_errors
-                    tok = pos[0] if ntk else ("", 0, 0)
-                    tree = pos[ntk] if len(pos) > ntk else ("", 0, 0)
-                    rows.append((url, tok[0], tok[1], tok[2],
-                                 tree[0], tree[1], tree[2], len(pos)))
-                except Exception:
-                    rows.append((url, "error", -1, -1, "error", -1, -1, -1))
-            yield pd.DataFrame(rows, columns=cols)
+    def per_doc(url, raw, row):
+        o = parse(raw, track_positions=True)
+        pos, ntk = o.error_positions, o.n_tokenizer_errors
+        tok = pos[0] if ntk else ("", 0, 0)
+        tree = pos[ntk] if len(pos) > ntk else ("", 0, 0)
+        return [(*tok, *tree, len(pos))]
 
-    return pages_df.select("url", "html").mapInPandas(
-        run, schema=POSITIONS_SCHEMA)
+    return _map_pages(pages_df, POSITIONS_SCHEMA, per_doc,
+                      ("error", -1, -1, "error", -1, -1, -1))
 
 
 MAIN_CONTENT_SCHEMA = ("url string, main_text string, n_dropped long, "
@@ -271,24 +289,12 @@ def extract_main_content(pages_df):
     main vs full-body char counts — the boilerplate ratio a curation
     pipeline filters on)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..engine.extractor import extract_main_text
-        cols = ["url", "main_text", "n_dropped", "main_chars", "body_chars"]
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                raw = bytes(html) if html is not None else b""
-                try:
-                    o = parse(raw)
-                    main, dropped = extract_main_text(o.document)
-                    body = extract_body_text(o.document)
-                    rows.append((url, main, dropped, len(main), len(body)))
-                except Exception:
-                    rows.append((url, "", -1, -1, -1))
-            yield pd.DataFrame(rows, columns=cols)
+    def per_doc(url, raw, row):
+        doc = parse(raw).document
+        main, dropped = extract_main_text(doc)
+        return [(main, dropped, len(main), len(extract_body_text(doc)))]
 
-    return pages_df.select("url", "html").mapInPandas(
-        run, schema=MAIN_CONTENT_SCHEMA)
+    return _map_pages(pages_df, MAIN_CONTENT_SCHEMA, per_doc, ("", -1, -1, -1))
 
 
 PDF_SCHEMA = "url string, text string, ok boolean, n_chars long"
@@ -337,49 +343,7 @@ def extract_html_tables(pages_df):
     rows yield per batch, no explode of a materialized array column,
     so a million-cell page never builds a single giant array value."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
+    def per_doc(url, raw, row):
+        return extract_tables(parse(raw).document)
 
-        from ..engine.extractor import extract_tables
-
-        # same GC discipline as the text/links kernels: the DOM has
-        # parent↔child cycles — disable the cyclic collector during
-        # the parse loop, collect once per Arrow batch
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            for pdf in batches:
-                urls, ts, rs, cs, hs, txts = [], [], [], [], [], []
-                for url, html in zip(pdf["url"], pdf["html"]):
-                    raw = bytes(html) if html is not None else b""
-                    try:
-                        o = parse(raw)
-                        cells = extract_tables(o.document)
-                    except Exception:
-                        cells = []  # isolation: bad page, zero cells
-                    for t, r, c, h, txt in cells:
-                        urls.append(url)
-                        ts.append(t)
-                        rs.append(r)
-                        cs.append(c)
-                        hs.append(h)
-                        txts.append(txt)
-                # dtypes pinned so an empty batch (no tables in any
-                # page) doesn't surface float64 columns Arrow refuses
-                # to cast to long/boolean
-                yield pd.DataFrame({
-                    "url": pd.Series(urls, dtype=object),
-                    "table_idx": pd.Series(ts, dtype="int64"),
-                    "row_idx": pd.Series(rs, dtype="int64"),
-                    "col_idx": pd.Series(cs, dtype="int64"),
-                    "is_header": pd.Series(hs, dtype=bool),
-                    "cell_text": pd.Series(txts, dtype=object),
-                })
-                del pdf
-                gc.collect()
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-
-    return pages_df.select("url", "html").mapInPandas(
-        run, schema=TABLES_SCHEMA)
+    return _map_pages(pages_df, TABLES_SCHEMA, per_doc)

@@ -29,16 +29,14 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from urllib.parse import urljoin
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..engine import parse
-from ..engine.dom import HTML_NS, Document, DocumentFragment, Element, Text
+from ..engine.dom import HTML_NS, Document, DocumentFragment, Element
 from ..engine.extractor import find_body, text_content
+from .extract import _map_pages
 from .urls import canonicalize
 
 LINKS_SCHEMA = "url string, href string, target string, anchor string"
@@ -75,44 +73,20 @@ def harvest_anchors(doc: Document,
     return out
 
 
-def links_batch(pdf: pd.DataFrame, max_html_bytes: int, max_links: int,
-                passthrough: tuple[str, ...] = ()) -> pd.DataFrame:
-    """Parse one Arrow batch and explode it into anchor rows (pure
-    pandas-in/pandas-out; the parse never raises — a genuinely
-    unparseable row contributes zero link rows). ``passthrough``
-    columns are replicated onto each anchor row (e.g. the crawl
-    timestamp for streaming watermarks)."""
-    urls: list[str] = []
-    hrefs: list[str] = []
-    targets: list[str] = []
-    anchors: list[str] = []
-    extra: dict[str, list] = {c: [] for c in passthrough}
-    for row in pdf.itertuples(index=False):
-        raw = bytes(row.html) if row.html is not None else b""
-        if max_html_bytes and len(raw) > max_html_bytes:
-            raw = raw[:max_html_bytes]
+def resolve_anchors(doc: Document, base_url: str,
+                    max_links: int = 10_000) -> list[tuple[str, str, str]]:
+    """(href, target, anchor) for :func:`harvest_anchors`' edges, where
+    ``target`` is the href resolved against the page url (RFC 3986).
+    An unresolvable href or a NULL base url keeps the raw href as its
+    target instead of killing the task."""
+    out = []
+    for href, anchor in harvest_anchors(doc, max_links=max_links):
         try:
-            o = parse(raw)
-            pairs = harvest_anchors(o.document, max_links=max_links)
-        except Exception:  # never fail the task for one bad document
-            pairs = []
-        for href, anchor in pairs:
-            urls.append(row.url)
-            hrefs.append(href)
-            try:
-                targets.append(urljoin(row.url, href))
-            except Exception:  # unresolvable href / NULL base url —
-                targets.append(href)  # raw passthrough, never a task kill
-            anchors.append(anchor)
-            for c in passthrough:
-                extra[c].append(getattr(row, c))
-    out = {"url": urls, "href": hrefs, "target": targets,
-           "anchor": anchors}
-    # empty batches must keep the input dtype (a [] column defaults to
-    # float64, which Arrow refuses to cast to e.g. timestamp)
-    for c in passthrough:
-        out[c] = pd.Series(extra[c], dtype=pdf[c].dtype)
-    return pd.DataFrame(out)
+            target = urljoin(base_url, href)
+        except Exception:
+            target = href
+        out.append((href, target, anchor))
+    return out
 
 
 def extract_links(pages_df: DataFrame,
@@ -124,7 +98,9 @@ def extract_links(pages_df: DataFrame,
     href resolved against the page url (RFC 3986); all schemes pass
     through — apply :func:`http_links` for the crawl-frontier subset.
     Column pruning: only (url, html) + ``passthrough_cols`` reach the
-    kernel."""
+    kernel, and ``passthrough_cols`` are replicated onto each anchor
+    row (e.g. the crawl timestamp for streaming watermarks). A page
+    that fails to parse contributes zero link rows."""
     schema = LINKS_SCHEMA
     if passthrough_cols:
         by_name = {f.name: f for f in pages_df.schema.fields}
@@ -132,26 +108,13 @@ def extract_links(pages_df: DataFrame,
             f", {c} {by_name[c].dataType.simpleString()}"
             for c in passthrough_cols)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
+    def per_doc(url, raw, row):
+        return [link + row[2:] for link in resolve_anchors(
+            parse(raw).document, url, max_links_per_doc)]
 
-        # same GC discipline as operators/extract.py: the DOM has
-        # parent↔child cycles, so disable the cyclic collector during
-        # the parse loop and collect once per Arrow batch
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            for pdf in batches:
-                yield links_batch(pdf, max_html_bytes, max_links_per_doc,
-                                  passthrough_cols)
-                del pdf
-                gc.collect()
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-
-    cols = ("url", "html") + tuple(passthrough_cols)
-    return pages_df.select(*cols).mapInPandas(run, schema)
+    return _map_pages(pages_df, schema, per_doc,
+                      extra_cols=tuple(passthrough_cols),
+                      max_html_bytes=max_html_bytes)
 
 
 def http_links(links_df: DataFrame) -> DataFrame:

@@ -198,19 +198,6 @@ def expected_text(doc_id: int, text: str, lang: str, source: str) -> str:
     return base
 
 
-def has_parse_errors(doc_id: int, text: str = None) -> bool:
-    """Which docs the parse reports errors for (oracle mirror of
-    HAS_ERRORS_SQL — keep in lockstep): missing doctype (quirks), the
-    variant-4 ``<?xml...?>`` bogus-comment, misnested formatting (only
-    when the doc has ≥3 words — shorter docs don't get the misnested
-    variant, see _paragraph), or an error-carrying extras bucket."""
-    extra = EXTRAS.get(doc_id % 23)
-    misnested = doc_id % 7 == 3 and (
-        text is None or len(text.split(" ")) >= 3)
-    return (doc_id % 11 == 0 or doc_id % 10 == 4 or misnested
-            or (extra is not None and extra[2]))
-
-
 def build_page(doc_id: int, text: str, lang: str, source: str
                ) -> tuple[str, pd.Timestamp, bytes, str, str]:
     """Pure function: one documents row -> one pages row."""

@@ -149,16 +149,20 @@ def pages_to_warc(pages_df: DataFrame, n_files: int = 64) -> DataFrame:
         pdf = pdf.sort_values("url")
         # NaT → None (PAGES_SCHEMA is nullable): build_warc writes the
         # epoch sentinel instead of crashing the bucket task on
-        # NaT.strftime; NULL html packs as an empty payload
-        recs = [(u, None if t is pd.NaT else t.to_pydatetime(),
+        # NaT.strftime; NULL html packs as an empty payload and a NULL
+        # url as an empty WARC-Target-URI
+        recs = [(u if u is not None else "",
+                 None if t is pd.NaT else t.to_pydatetime(),
                  bytes(h) if h is not None else b"")
                 for u, t, h in zip(pdf["url"], pdf["warc_ts"],
                                    pdf["html"])]
         return pd.DataFrame({"warc_id": [f"warc-{key[0]:05d}"],
                              "warc": [build_warc(recs)]})
 
+    # a NULL url has a NULL crc32; coalesce it into bucket 0 so the
+    # key reaching pack() is always an integer
     bucketed = pages_df.select("url", "warc_ts", "html").withColumn(
-        "_b", F.crc32(F.col("url")) % n_files)
+        "_b", F.coalesce(F.crc32(F.col("url")) % n_files, F.lit(0)))
     return bucketed.groupBy("_b").applyInPandas(
         pack, schema="warc_id string, warc binary")
 

@@ -445,6 +445,138 @@ def test_extract_failures_truncation_and_failure_isolation(spark, pages):
     assert all(r["n_errors"] >= 0 for r in ok)
 
 
+_OK_URL = "https://ok.example/a"
+_NULL_URL = "https://bad.example/null"
+_GARBAGE_URL = "https://bad.example/garbage"
+_KERNEL_PAGES = [
+    (_OK_URL, b'<!DOCTYPE html><html><head><title>T</title></head><body>'
+              b'<nav>menu</nav><main><p>Hello <a href="/x">world</a></p>'
+              b'<table><tr><th>h</th><td>c</td></tr></table></main>'
+              b'</body></html>'),
+    (_NULL_URL, None),
+    (_GARBAGE_URL, bytes(range(256)) * 4),  # no "<a" or "<table" inside
+]
+_LINEAGE = {"part_id": 0, "batch_seq": 0}
+# operator -> (its module, the normal page's rows, the NULL-html page's
+# rows); rows without their url, extract_pages' spans checked apart
+_KERNEL_CASES = {
+    "extract_pages": ("extract", [dict(
+        text="menuHello worldhc", encoding="windows-1252", quirks_mode=0,
+        n_errors=0, n_tokens=32, n_elements=13, html_bytes=177,
+        truncated=False, **_LINEAGE)], [dict(
+        text="", encoding="windows-1252", quirks_mode=1, n_errors=1,
+        n_tokens=1, n_elements=3, html_bytes=0, truncated=False,
+        **_LINEAGE)]),
+    "extract_links": ("links", [dict(
+        href="/x", target="https://ok.example/x", anchor="world")], []),
+    "extract_html_tables": ("extract", [
+        dict(table_idx=0, row_idx=0, col_idx=0, is_header=True,
+             cell_text="h"),
+        dict(table_idx=0, row_idx=0, col_idx=1, is_header=False,
+             cell_text="c")], []),
+    "extract_main_content": ("extract", [dict(
+        main_text="Hello worldhc", n_dropped=0, main_chars=13,
+        body_chars=17)], [dict(
+        main_text="", n_dropped=0, main_chars=0, body_chars=0)]),
+    "extract_error_positions": ("extract", [dict(
+        tok_code="", tok_line=0, tok_col=0, tree_code="", tree_line=0,
+        tree_col=0, n_positions=0)], [dict(
+        tok_code="", tok_line=0, tok_col=0,
+        tree_code="expected-doctype-but-got-eof", tree_line=1, tree_col=1,
+        n_positions=1)]),
+    "roundtrip_check": ("extract", [dict(idempotent=True)],
+                        [dict(idempotent=True)]),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_KERNEL_CASES))
+def test_html_operator_normal_null_and_garbage_rows(spark, op):
+    """Every HTML operator over one batch holding a normal page, a NULL
+    html row and a non-HTML byte blob: the task succeeds, the normal
+    page gives the rows it always gave, the NULL row gives the
+    empty-document result (the parse of b""), and the garbage row gives
+    a parsed result (never the failure row), which for the fan-out
+    operators is no row at all."""
+    import importlib
+
+    mod_name, want_ok, want_null = _KERNEL_CASES[op]
+    mod = importlib.import_module(f"html_parser_spark.operators.{mod_name}")
+    df = spark.createDataFrame(_KERNEL_PAGES,
+                               "url string, html binary").coalesce(1)
+    got = {u: [] for u, _ in _KERNEL_PAGES}
+    for r in getattr(mod, op)(df).collect():  # a failed task raises here
+        got[r["url"]].append(r.asDict())
+    spans = [[s["tag"] for s in r.pop("spans")]
+             for rows in got.values() for r in rows if "spans" in r]
+    for rows in got.values():
+        for r in rows:
+            del r["url"]
+    assert got[_OK_URL] == want_ok
+    assert got[_NULL_URL] == want_null
+    garbage = got[_GARBAGE_URL]
+    assert len(garbage) == len(want_null)
+    for r in garbage:
+        assert r.get("encoding") != "error"
+        assert all(r[c] >= 0 for c in ("n_errors", "n_dropped",
+                                        "n_positions") if c in r)
+        assert r.get("idempotent", True) is not None
+    if op == "extract_pages":
+        assert spans[0] == ["nav", "a", "p", "th", "td", "tr", "tbody",
+                            "table", "main"]
+        assert spans[1:] == [[], []]
+
+
+def test_page_kernel_caps_isolates_and_restores_gc():
+    """The shared batch function on local pandas, no Spark: NULL html
+    reaches the operator as b"", the cap cuts before the operator sees
+    the bytes and is flagged, a raising document yields the failure row
+    (or no row when the operator declares none), lineage defaults to
+    part_id -1, and the collector is off while batches stream and back
+    on once the generator is closed, even mid-stream."""
+    import gc
+
+    import pandas as pd
+
+    from html_parser_spark.operators.extract import _page_kernel
+
+    def per_doc(url, raw, row):
+        if url == "boom":
+            raise ValueError(url)
+        return [(raw.decode(), row[2])]
+
+    schema = ("url string, seen string, tag long, html_bytes long, "
+              "truncated boolean, part_id int, batch_seq long")
+    pdf = pd.DataFrame({"url": ["long", "null", "boom"],
+                        "html": [b"abcdefgh", None, b"xyz"],
+                        "tag": [1, 2, 3]})
+    assert gc.isenabled()
+    for fail, want_boom in ((("failed", -1), [("failed", -1, 3, False)]),
+                            (None, [])):
+        gen = _page_kernel(schema, per_doc, fail, max_html_bytes=4)(
+            iter([pdf, pdf]))
+        first = next(gen)
+        assert not gc.isenabled()
+        assert list(first.columns) == ["url", "seen", "tag", "html_bytes",
+                                       "truncated", "part_id",
+                                       "batch_seq"]
+        got = {r[0]: r[1:5] for r in first.itertuples(index=False)}
+        assert got.pop("long") == ("abcd", 1, 4, True)
+        assert got.pop("null") == ("", 2, 0, False)
+        assert [got[u] for u in got] == want_boom
+        assert set(first["part_id"]) == {-1}
+        assert set(next(gen)["batch_seq"]) == {1}
+        gen.close()
+        assert gc.isenabled()
+    # an empty batch still carries every column, as object columns
+    # that Arrow casts to any type
+    gen = _page_kernel(schema, per_doc)(iter([pdf.iloc[:0]]))
+    empty = next(gen)
+    gen.close()
+    assert len(empty) == 0 and len(empty.columns) == 7
+    assert all(t == object for t in empty.dtypes)
+    assert gc.isenabled()
+
+
 def test_bounded_zlib_defuses_deflate_bomb():
     """A deflate bomb (KBs in, 100 MB out) must come back capped at
     max_bytes+1 — never materializing the full payload — and corrupt
@@ -1690,6 +1822,26 @@ def test_warc_spark_pack_unpack_matches_input(spark, pages):
     b = {(r["url"], r["warc_ts"], bytes(r["html"]))
          for r in rec.collect()}
     assert a == b
+
+
+def test_warc_pack_null_url_round_trips(spark):
+    """A NULL url neither fails the bucket task (its NULL crc32 bucket
+    key is coalesced) nor drops the record: it packs with an empty
+    WARC-Target-URI and comes back as an empty url, next to a normal
+    row."""
+    from datetime import datetime
+
+    from html_parser_spark.sources.warc import pages_to_warc, warc_records
+
+    ts = datetime(2025, 3, 1, 12, 0, 0)
+    pages = spark.createDataFrame(
+        [("https://a.example/1", ts, b"<p>one</p>"),
+         (None, ts, b"<p>two</p>")],
+        "url string, warc_ts timestamp, html binary")
+    got = {(r["url"], r["warc_ts"], bytes(r["html"]))
+           for r in warc_records(pages_to_warc(pages, n_files=4)).collect()}
+    assert got == {("https://a.example/1", ts, b"<p>one</p>"),
+                   ("", ts, b"<p>two</p>")}
 
 
 def test_warc_walker_pathological_inputs():

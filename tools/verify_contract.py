@@ -5,7 +5,9 @@ values, AND the Arrow result types on both sides (the driver's value
 hash is type-sensitive: a DuckDB HUGEINT window-sum surfacing as
 decimal128 vs Spark's int64 hash-mismatches even when every value is
 identical — exactly the round-2 ``crawl_sessions`` failure mode).
-Usage: python tools/verify_contract.py [sf_dir] [query ...]"""
+Usage: python tools/verify_contract.py [sf_dir] [query ...]
+Exits non-zero on any failure or unknown query name; the last line is
+``PASS n/m`` (queries passed / queries run)."""
 
 from __future__ import annotations
 
@@ -72,6 +74,12 @@ def main() -> int:
     import __spark_entry__ as e
     from html_parser_spark.plans.pipeline import configure
 
+    qs, oracles = e.queries(), e.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {', '.join(unknown)}")
+        return 2
+
     spark = configure(cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -83,11 +91,11 @@ def main() -> int:
         except Exception:
             pass
 
-    qs, oracles = e.queries(), e.oracle_sql()
-    failures = 0
+    failures = passed = run = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        run += 1
         t0 = time.monotonic()
         try:
             sdf = fn(spark, sf_dir)
@@ -131,9 +139,11 @@ def main() -> int:
             print(f"FAIL {name}: {'; '.join(status)}"[:2000])
             failures += 1
         else:
+            passed += 1
             print(f"PASS {name} ({len(srows)} rows) "
                   f"[{time.monotonic() - t0:.1f}s]")
     spark.stop()
+    print(f"PASS {passed}/{run}")
     return 1 if failures else 0
 
 
