@@ -12,8 +12,9 @@ Two pieces, split the way a production crawler splits them:
 - :func:`robots_filter` — the scale piece: frontier urls ⋈ rules on
   host, Google-REP longest-match semantics (most specific rule wins;
   on a length tie ``allow`` beats ``disallow``; no matching rule means
-  allowed). Pure Catalyst: one equi-join on host plus one per-url
-  window, both expressible identically in the SQL oracle.
+  allowed) over literal path prefixes: the ``*`` and ``$`` wildcards
+  are not supported. Pure Catalyst: one equi-join on host plus one
+  per-url window, both expressible identically in the SQL oracle.
 
 Scale shape: the rules table is one row per (host, rule) — even at
 10^8 hosts it is dwarfed by a 10^12-url frontier, so the join is an
@@ -50,7 +51,10 @@ def parse_robots_lines(host: str, body: str) -> list[tuple]:
     empty Disallow value (``Disallow:``) means allow-all and yields no
     rule. Per RFC 9309: consecutive user-agent lines share one group,
     blank lines do NOT end a group (only the next user-agent line
-    after rules have begun starts a new one)."""
+    after rules have begun starts a new one). Rule values are kept as
+    written: ``*`` and ``$`` are not translated, so :func:`robots_filter`
+    matches them as literal path characters, not as wildcards or an
+    end anchor."""
     rules: list[tuple] = []
     in_star = False
     group_has_rules = False
@@ -107,7 +111,12 @@ def robots_filter(frontier_df: DataFrame, rules_df: DataFrame,
     window partitions on a per-row tag, not the url value, so two
     input rows sharing a url each keep their payload columns. Adds
     ``allowed`` boolean plus the winning ``rule``/``prefix`` ('' when
-    no rule matched) for crawl-audit logs."""
+    no rule matched) for crawl-audit logs.
+
+    Rules match as literal path prefixes (``startswith``): the REP
+    wildcard ``*`` and end anchor ``$`` are not supported, so a rule
+    such as ``Disallow: /*?`` matches only paths that literally begin
+    with ``/*?`` and does not block ``/a?b``."""
     host = F.regexp_extract(F.col(url_col), HOST_OF_RE, 1)
     path_raw = F.regexp_replace(F.col(url_col), SCHEME_HOST_RE, "")
     path = F.when(path_raw == "", F.lit("/")).otherwise(path_raw)

@@ -532,7 +532,10 @@ def test_page_kernel_caps_isolates_and_restores_gc():
     the bytes and is flagged, a raising document yields the failure row
     (or no row when the operator declares none), lineage defaults to
     part_id -1, and the collector is off while batches stream and back
-    on once the generator is closed, even mid-stream."""
+    on once the generator is closed, even mid-stream. The heap alive
+    before the first batch is frozen out of the per-batch collections
+    while the generator lives and unfrozen when it closes, unless the
+    caller had frozen it already."""
     import gc
 
     import pandas as pd
@@ -549,13 +552,14 @@ def test_page_kernel_caps_isolates_and_restores_gc():
     pdf = pd.DataFrame({"url": ["long", "null", "boom"],
                         "html": [b"abcdefgh", None, b"xyz"],
                         "tag": [1, 2, 3]})
-    assert gc.isenabled()
+    assert gc.isenabled() and gc.get_freeze_count() == 0
     for fail, want_boom in ((("failed", -1), [("failed", -1, 3, False)]),
                             (None, [])):
         gen = _page_kernel(schema, per_doc, fail, max_html_bytes=4)(
             iter([pdf, pdf]))
         first = next(gen)
         assert not gc.isenabled()
+        assert gc.get_freeze_count() > 0
         assert list(first.columns) == ["url", "seen", "tag", "html_bytes",
                                        "truncated", "part_id",
                                        "batch_seq"]
@@ -565,8 +569,25 @@ def test_page_kernel_caps_isolates_and_restores_gc():
         assert [got[u] for u in got] == want_boom
         assert set(first["part_id"]) == {-1}
         assert set(next(gen)["batch_seq"]) == {1}
-        gen.close()
+        assert gc.get_freeze_count() > 0 and not gc.isenabled()
+        gen.close()  # mid-stream: the input iterator is not exhausted
         assert gc.isenabled()
+        assert gc.get_freeze_count() == 0
+    # closed at the end of the stream
+    gen = _page_kernel(schema, per_doc)(iter([pdf]))
+    assert len(list(gen)) == 1
+    assert gc.isenabled() and gc.get_freeze_count() == 0
+    # a caller that froze its own heap keeps it frozen (compare with
+    # > 0: frozen temporaries are freed by refcount, so the count drifts)
+    gc.freeze()
+    try:
+        gen = _page_kernel(schema, per_doc)(iter([pdf, pdf]))
+        next(gen)
+        assert not gc.isenabled() and gc.get_freeze_count() > 0
+        gen.close()
+        assert gc.isenabled() and gc.get_freeze_count() > 0
+    finally:
+        gc.unfreeze()
     # an empty batch still carries every column, as object columns
     # that Arrow casts to any type
     gen = _page_kernel(schema, per_doc)(iter([pdf.iloc[:0]]))
@@ -574,7 +595,7 @@ def test_page_kernel_caps_isolates_and_restores_gc():
     gen.close()
     assert len(empty) == 0 and len(empty.columns) == 7
     assert all(t == object for t in empty.dtypes)
-    assert gc.isenabled()
+    assert gc.isenabled() and gc.get_freeze_count() == 0
 
 
 def test_bounded_zlib_defuses_deflate_bomb():
@@ -1643,6 +1664,31 @@ Disallow: /shared
     assert got == [("h.example", "disallow", "/tmp/"),
                    ("h.example", "allow", "/tmp/ok"),
                    ("h.example", "disallow", "/shared")]
+
+
+def test_robots_rules_match_as_literal_prefixes(spark):
+    """``*`` and ``$`` in a rule are literal characters, not wildcards:
+    the parser keeps the value as written and the filter matches it as
+    a plain path prefix, so ``Disallow: /*?`` does not block ``/a?b``
+    (only a path that literally starts with ``/*?`` does)."""
+    from html_parser_spark.operators.robots import (parse_robots_lines,
+                                                    robots_filter)
+
+    rules = parse_robots_lines(
+        "a.com", "User-agent: *\nDisallow: /*?\nDisallow: /x$\n")
+    assert rules == [("a.com", "disallow", "/*?"),
+                     ("a.com", "disallow", "/x$")]
+    urls = spark.createDataFrame(
+        [("https://a.com/a?b",), ("https://a.com/x",),
+         ("https://a.com/*?q",), ("https://a.com/x$y",)], ["canon"])
+    got = {r["canon"]: (r["allowed"], r["prefix"])
+           for r in robots_filter(
+               urls, spark.createDataFrame(rules, ["host", "rule",
+                                                   "prefix"])).collect()}
+    assert got == {"https://a.com/a?b": (True, ""),
+                   "https://a.com/x": (True, ""),
+                   "https://a.com/*?q": (False, "/*?"),
+                   "https://a.com/x$y": (False, "/x$")}
 
 
 def test_parse_robots_txt_and_filter_semantics(spark):
