@@ -122,10 +122,6 @@ class Element(ParentNode):
     def get(self, name: str, default=None):
         return self.attrs.get(name, default)
 
-    @property
-    def is_html(self) -> bool:
-        return self.namespace == HTML_NS
-
 
 class Text(Node):
     __slots__ = ("data",)

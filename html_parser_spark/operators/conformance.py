@@ -7,17 +7,16 @@ TestTreeConstructor.php:65-136); here the cases become a DataFrame and
 the pass/fail evaluation fans out across executors — at full
 html5lib-tests scale (thousands of cases × fragment contexts) that's a
 few seconds instead of minutes, and the *same* kernel binary (the
-engine package shipped via --py-files) is what gets certified.
+engine package shipped via --py-files) is what gets certified, on the
+same row driver (``operators/extract.py``) as the production UDF.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
-
-import pandas as pd
 
 from .. import conformance as conf
+from .extract import _map_rows
 
 CASE_SCHEMA = "case_id string, kind string, payload string"
 RESULT_SCHEMA = "case_id string, kind string, passed boolean"
@@ -69,15 +68,7 @@ def conformance_results(spark, num_partitions: int = 0):
     if num_partitions:
         df = df.repartition(num_partitions)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            passed = []
-            for kind, payload in zip(pdf["kind"], pdf["payload"]):
-                try:
-                    passed.append(bool(_run_case(kind, payload)))
-                except Exception:
-                    passed.append(False)
-            yield pd.DataFrame({"case_id": pdf["case_id"],
-                                "kind": pdf["kind"], "passed": passed})
+    def per_row(row):
+        return [(bool(_run_case(row[1], row[2])),)]
 
-    return df.mapInPandas(run, schema=RESULT_SCHEMA)
+    return _map_rows(df, RESULT_SCHEMA, per_row, (False,))

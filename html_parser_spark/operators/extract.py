@@ -1,6 +1,6 @@
 """The flagship operator: WHATWG parse + text extraction over Arrow
-batches of raw html bytes, and the shared kernel every HTML operator
-runs on.
+batches of raw html bytes, and the one row driver every per-row
+``mapInPandas`` operator of the package runs on.
 
 Equivalent reference surface: ``Parser::parse`` + body ``textContent``
 (/root/reference/lib/Parser.php:49-142, README.md:138-147). The whole
@@ -9,13 +9,24 @@ Python call per document (the stages are coupled by feedback loops —
 SURVEY.md §3.4 — so they fuse into a single kernel), applied across an
 Arrow batch under ``mapInPandas``.
 
-One kernel, many operators. Each HTML operator here and in
-``operators/links.py`` is a per-document function plus its output
-schema; :func:`_page_kernel` is the one batch loop that runs them, and
-:func:`_map_pages` the one ``mapInPandas`` call. The kernel owns column
-pruning, NULL html → ``b""``, the byte cap, per-document failure
-isolation, the GC policy and the lineage columns, so each of those is
-written once and holds for every operator alike.
+One driver, fourteen operators. Each per-row operator is a
+``per_row(row) -> rows`` function plus its output schema;
+:func:`_row_kernel` is the one batch loop that runs them, and
+:func:`_map_rows` the one ``mapInPandas`` call. The driver owns the
+batch loop, per-row failure isolation, by-name pass-through of every
+input column the output schema also names (so a NULL key rides
+through as NULL), the lineage columns, the frame build and the GC
+policy, so each of those is written once and holds for every operator
+alike. The six HTML operators (``extract_pages``, ``extract_links``,
+``extract_html_tables``, ``extract_main_content``,
+``extract_error_positions``, ``roundtrip_check``) share one more
+per-row step, :func:`_page_rows` (through :func:`_map_pages`): NULL
+html → ``b""``, the ``preprocess`` hook, the byte cap and the
+``html_bytes``/``truncated`` columns. The other eight are
+``extract_pdf_pages``, ``fragment.parse_fragments``,
+``robots.parse_robots_txt``, ``multimodal.image_ahash``,
+``multimodal.decode_media``, ``multimodal.frame_sample``,
+``conformance.conformance_results`` and ``sources/warc.warc_records``.
 
 Scale notes (100 TB / 10^12 docs):
 
@@ -23,24 +34,24 @@ Scale notes (100 TB / 10^12 docs):
   the default 10k-rows-per-batch would make multi-GB batches. Callers
   must set ``spark.sql.execution.arrow.maxRecordsPerBatch`` to ~64-128
   (done in ``plans.pipeline.configure``).
-- **Bounded memory.** Per-document work is O(doc size), and the kernel
-  hard-caps every document at ``max_html_bytes`` (64 MiB unless the
+- **Bounded memory.** Per-document work is O(doc size), and the HTML
+  step hard-caps every document at ``max_html_bytes`` (64 MiB unless the
   operator takes the kwarg) before any operator sees it: pathological
   documents are truncated at the cap, never parsed unbounded. Where the
   schema has ``truncated`` and ``html_bytes`` columns the cut is
   flagged and the parsed size reported.
 - **GC per batch, not per allocation, over the batch's objects only.**
   The DOM has parent↔child cycles, so the cyclic collector would
-  otherwise run continuously during parse. The kernel disables it for
+  otherwise run continuously during parse. The driver disables it for
   its generator's lifetime and runs one ``gc.collect()`` after each
   yielded batch (the garbage is bounded: one batch's DOMs). A full
   collection would also scan the worker's whole long-lived heap
   (pyspark, pandas, pyarrow, the engine's module state) on every
-  batch, so the kernel freezes (``gc.freeze()``) what is alive when
+  batch, so the driver freezes (``gc.freeze()``) what is alive when
   its first batch starts: each collection then scans only what the
   generator made since. When the generator closes it unfreezes what
   it froze and re-enables the collector. A caller whose heap is
-  already frozen keeps it frozen; the kernel then freezes nothing.
+  already frozen keeps it frozen; the driver then freezes nothing.
 - **Counters, not lists.** Parse errors become per-doc counts plus
   per-partition counter rows; full error tuples never leave the executor
   (the reference gates error collection the same way for performance —
@@ -75,8 +86,8 @@ LINKS_COL_SCHEMA = ("links array<struct<href:string,target:string,"
                     "anchor:string>>")
 
 
-# columns the kernel fills itself wherever an operator's schema has them
-_KERNEL_COLS = ("url", "html_bytes", "truncated", "part_id", "batch_seq")
+# lineage columns the driver fills wherever an operator's schema has them
+_LINEAGE = ("part_id", "batch_seq")
 
 
 def _field_names(schema: str) -> list[str]:
@@ -85,6 +96,13 @@ def _field_names(schema: str) -> list[str]:
     while "<" in flat:  # drop nested type parameters, innermost first
         flat = re.sub(r"<[^<>]*>", "", flat)
     return [f.split()[0] for f in flat.split(",")]
+
+
+def _own_cols(names: list[str], in_cols) -> list[str]:
+    """The columns a ``per_row`` function fills, in schema order: the
+    schema's, minus the input columns the driver passes through and
+    the lineage."""
+    return [n for n in names if n not in in_cols and n not in _LINEAGE]
 
 
 def _partition_id() -> int:
@@ -96,22 +114,20 @@ def _partition_id() -> int:
         return -1
 
 
-def _page_kernel(schema: str, per_doc, fail: tuple | None = None,
-                 max_html_bytes: int = 64 * 1024 * 1024, preprocess=None):
-    """The ``mapInPandas`` function shared by every HTML operator: pure
+def _row_kernel(schema: str, per_row, fail: tuple | None = None):
+    """The ``mapInPandas`` function every per-row operator runs on: pure
     pandas in and out, so it also runs on local frames without Spark.
 
-    Input batches are (url, html, ...) rows. Per document: NULL html
-    becomes ``b""``, ``preprocess`` (if any) runs, the bytes are capped
-    at ``max_html_bytes``, and ``per_doc(url, raw, row)`` returns the
-    document's output rows (``row`` is the whole input tuple). Each row
-    is a tuple of the schema's columns minus ``_KERNEL_COLS``, in
-    schema order; the kernel adds the url, the parsed size
-    (``html_bytes``), the cap flag (``truncated``) and the lineage
-    (``part_id``, ``batch_seq``) where the schema has those columns. A
-    document whose ``preprocess`` or ``per_doc`` raises yields the row
-    ``fail`` instead, or no row when ``fail`` is None: one bad document
-    never fails the task.
+    ``per_row(row)`` gets one input row (a tuple in the batch's column
+    order) and returns that row's output rows. Each is a tuple of the
+    schema's columns that the driver does not fill, in schema order.
+    The driver fills every column the input batch also has, by name
+    (each output row carries its input row's value, so a NULL key rides
+    through as NULL and never reaches the operator's code), and the
+    lineage (``part_id``, ``batch_seq``) where the schema has those
+    columns. A row whose ``per_row`` raises yields the row ``fail``
+    instead, or no row when ``fail`` is None: one bad row never fails
+    the task.
 
     GC: the collector is off while the generator lives, and one
     ``gc.collect()`` runs after each yielded batch. When it starts, the
@@ -120,7 +136,6 @@ def _page_kernel(schema: str, per_doc, fail: tuple | None = None,
     made since: the batches' DOMs and frames. Closing the generator
     unfreezes what it froze and re-enables the collector."""
     names = _field_names(schema)
-    own = [n for n in names if n not in _KERNEL_COLS]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         part_id = _partition_id()
@@ -133,31 +148,27 @@ def _page_kernel(schema: str, per_doc, fail: tuple | None = None,
             gc.freeze()
         try:
             for seq, pdf in enumerate(batches):
-                rows, urls, sizes, flags = [], [], [], []
+                through = {n: i for i, n in enumerate(pdf.columns)
+                           if n in names}
+                own = _own_cols(names, through)
+                rows, sources = [], []
                 for row in pdf.itertuples(index=False, name=None):
-                    url, html = row[0], row[1]
-                    raw = bytes(html) if html is not None else b""
-                    truncated = False
                     try:
-                        if preprocess is not None:
-                            raw = preprocess(raw)
-                        if max_html_bytes and len(raw) > max_html_bytes:
-                            raw, truncated = raw[:max_html_bytes], True
-                        out = per_doc(url, raw, row)
-                    except Exception:  # isolate the bad document
+                        out = per_row(row)
+                    except Exception:  # isolate the bad row
                         out = [] if fail is None else [fail]
                     rows += out
-                    urls += [url] * len(out)
-                    sizes += [len(raw)] * len(out)
-                    flags += [truncated] * len(out)
-                cols = dict(zip(own, zip(*rows))) if rows else {}
-                cols.update(url=urls, html_bytes=sizes, truncated=flags,
-                            part_id=[part_id] * len(urls),
-                            batch_seq=[seq] * len(urls))
+                    sources += [row] * len(out)
+                cols = dict(zip(own, zip(*rows)))
+                if sources:
+                    ins = list(zip(*sources))
+                    cols.update((n, ins[i]) for n, i in through.items())
+                cols.update(part_id=[part_id] * len(rows),
+                            batch_seq=[seq] * len(rows))
                 # an empty batch gets object columns, which Arrow casts
                 # to any type (an empty float64 column fails on timestamps)
                 yield pd.DataFrame({n: cols.get(n, ()) for n in names},
-                                   dtype=None if urls else object)
+                                   dtype=None if rows else object)
                 gc.collect()
         finally:
             if froze:
@@ -168,12 +179,55 @@ def _page_kernel(schema: str, per_doc, fail: tuple | None = None,
     return run
 
 
+def _map_rows(df, schema: str, per_row, fail: tuple | None = None):
+    """Run :func:`_row_kernel` over ``df``, already pruned to the
+    columns ``per_row`` reads and the ones it passes through."""
+    return df.mapInPandas(_row_kernel(schema, per_row, fail), schema=schema)
+
+
+def _page_rows(schema: str, in_cols, per_doc, fail: tuple | None = None,
+               max_html_bytes: int = 64 * 1024 * 1024, preprocess=None):
+    """The per-row step shared by the HTML operators, over input rows
+    (url, html, ...) whose column names are ``in_cols``.
+
+    Per document: NULL html becomes ``b""``, ``preprocess`` (if any)
+    runs, the bytes are capped at ``max_html_bytes``, and
+    ``per_doc(url, raw, row)`` returns the document's output rows
+    without the parsed size (``html_bytes``) and cap flag
+    (``truncated``), which this step adds where the schema has that
+    adjacent pair. A document whose ``preprocess`` or ``per_doc``
+    raises yields ``fail`` with the size reached so far, or no row
+    when ``fail`` is None."""
+    own = _own_cols(_field_names(schema), in_cols)
+    at = own.index("html_bytes") if "html_bytes" in own else None
+
+    def per_row(row):
+        html = row[1]
+        raw = bytes(html) if html is not None else b""
+        truncated = False
+        try:
+            if preprocess is not None:
+                raw = preprocess(raw)
+            if max_html_bytes and len(raw) > max_html_bytes:
+                raw, truncated = raw[:max_html_bytes], True
+            out = per_doc(row[0], raw, row)
+        except Exception:  # isolate the bad document, keep its size
+            out = [] if fail is None else [fail]
+        if at is None:
+            return out
+        return [r[:at] + (len(raw), truncated) + r[at:] for r in out]
+
+    return per_row
+
+
 def _map_pages(pages_df, schema: str, per_doc, fail: tuple | None = None,
-               extra_cols: tuple[str, ...] = (), **kernel):
+               extra_cols=(), **page):
     """Column-prune ``pages_df`` to (url, html, *extra_cols) and run
-    :func:`_page_kernel` over it; ``kernel`` takes its cap and hook."""
-    return pages_df.select("url", "html", *extra_cols).mapInPandas(
-        _page_kernel(schema, per_doc, fail, **kernel), schema=schema)
+    :func:`_page_rows` over it on the row driver; ``page`` takes the
+    cap and hook."""
+    df = pages_df.select("url", "html", *extra_cols)
+    return _map_rows(df, schema,
+                     _page_rows(schema, df.columns, per_doc, fail, **page))
 
 
 def bounded_zlib(max_bytes: int):
@@ -240,8 +294,11 @@ def extract_pages(pages_df, max_html_bytes: int = 64 * 1024 * 1024,
 
     fail = ("", [], "error", 0, -1, 0, 0) + (([],) if with_links else ())
     schema = EXTRACT_SCHEMA + (", " + LINKS_COL_SCHEMA if with_links else "")
+    # aliased: a transport column named like an output column (say
+    # ``encoding``) would otherwise pass through in its place
     return _map_pages(pages_df, schema, per_doc, fail,
-                      (transport_col,) if transport_col else (),
+                      (pages_df[transport_col].alias("transport"),)
+                      if transport_col else (),
                       max_html_bytes=max_html_bytes, preprocess=preprocess)
 
 
@@ -324,22 +381,14 @@ def extract_pdf_pages(pdfs_df):
     parser (engine/pdf.py). Same isolation discipline as the HTML
     kernel: a malformed document yields ok=false, never a failed
     task. Column-pruned to (url, pdf) before the UDF."""
+    from ..engine.pdf import extract_pdf_text
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..engine.pdf import extract_pdf_text
-        cols = ["url", "text", "ok", "n_chars"]
-        for pdf in batches:
-            rows = []
-            for url, raw in zip(pdf["url"], pdf["pdf"]):
-                try:
-                    text = extract_pdf_text(
-                        bytes(raw) if raw is not None else b"")
-                    rows.append((url, text, True, len(text)))
-                except Exception:
-                    rows.append((url, "", False, 0))
-            yield pd.DataFrame(rows, columns=cols)
+    def per_row(row):
+        text = extract_pdf_text(bytes(row[1]) if row[1] is not None else b"")
+        return [(text, True, len(text))]
 
-    return pdfs_df.select("url", "pdf").mapInPandas(run, schema=PDF_SCHEMA)
+    return _map_rows(pdfs_df.select("url", "pdf"), PDF_SCHEMA, per_row,
+                     ("", False, 0))
 
 
 TABLES_SCHEMA = ("url string, table_idx long, row_idx long, col_idx long, "

@@ -4,18 +4,15 @@ Reference surface: ``Parser::parseFragment``
 (/root/reference/lib/Parser.php:61-72; fragment algorithm
 TreeConstructor.php:278-323): parse a snippet in the context of a given
 element (context-dependent initial tokenizer state, synthetic root,
-insertion-mode reset). Batch shape mirrors the page kernel: Arrow
-batches under ``mapInPandas``, snippets as a string column.
+insertion-mode reset). Runs on the shared row driver
+(``operators/extract.py``), snippets as a string column.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from ..engine import parse_fragment, serialize_inner
 from ..engine.extractor import text_content
+from .extract import _map_rows
 
 FRAGMENT_SCHEMA = ("id long, text string, html string, ok boolean")
 
@@ -26,22 +23,10 @@ def parse_fragments(df, context: str = "div", id_col: str = "id",
     snippet in ``context``, return its textContent and normalized
     innerHTML serialization."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, texts, htmls, oks = [], [], [], []
-            for i, s in zip(pdf[id_col], pdf[snippet_col]):
-                try:
-                    frag = parse_fragment(s if s is not None else "", context)
-                    texts.append(text_content(frag))
-                    htmls.append(serialize_inner(frag))
-                    oks.append(True)
-                except Exception:
-                    texts.append("")
-                    htmls.append("")
-                    oks.append(False)
-                ids.append(int(i))
-            yield pd.DataFrame({"id": ids, "text": texts, "html": htmls,
-                                "ok": oks})
+    def per_row(row):
+        frag = parse_fragment(row[1] if row[1] is not None else "", context)
+        return [(text_content(frag), serialize_inner(frag), True)]
 
-    return df.select(id_col, snippet_col).mapInPandas(
-        run, schema=FRAGMENT_SCHEMA)
+    return _map_rows(df.select(df[id_col].cast("long").alias("id"),
+                               df[snippet_col].alias("snippet")),
+                     FRAGMENT_SCHEMA, per_row, ("", "", False))

@@ -109,8 +109,7 @@ def extract_links(pages_df: DataFrame,
             for c in passthrough_cols)
 
     def per_doc(url, raw, row):
-        return [link + row[2:] for link in resolve_anchors(
-            parse(raw).document, url, max_links_per_doc)]
+        return resolve_anchors(parse(raw).document, url, max_links_per_doc)
 
     return _map_pages(pages_df, schema, per_doc,
                       extra_cols=tuple(passthrough_cols),

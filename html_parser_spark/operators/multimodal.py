@@ -47,6 +47,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import functions as F
 
+from .extract import _map_rows
+
 MEDIA_SCHEMA = ("media_id long, kind string, payload binary, "
                 "declared_w int, declared_h int")
 
@@ -334,22 +336,14 @@ def image_ahash(media_df):
     that fail to decode are dropped (the ok/failure audit lives in
     ``decode_media``)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, px = decode_png_pixels(bytes(payload))
-                    rows.append((int(mid), w, h, ahash64(px, w, h)))
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=["media_id", "width",
-                                              "height", "ahash"])
+    def per_row(row):
+        w, h, px = decode_png_pixels(bytes(row[1]))
+        return [(w, h, ahash64(px, w, h))]
 
-    return (media_df.where(F.col("kind") == "image")
-            .select("media_id", "payload")
-            .mapInPandas(run, schema=("media_id long, width int, "
-                                      "height int, ahash long")))
+    return _map_rows(media_df.where(F.col("kind") == "image")
+                     .select("media_id", "payload"),
+                     "media_id long, width int, height int, ahash long",
+                     per_row)
 
 
 def decode_gif(b: bytes) -> tuple[int, int, int]:
@@ -477,28 +471,18 @@ def decode_media(media_df):
     For audio, (width, height, n_frames) carry
     (sample_rate, n_channels, n_samples)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"],
-                                          pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    w, h, frames = _decode_one(raw)
-                    feat = hashlib.md5(raw).hexdigest()
-                    rows.append((int(mid), kind, w, h, frames,
-                                 len(raw), feat, True))
-                except Exception:
-                    rows.append((int(mid), kind, 0, 0, 0, len(raw),
-                                 "", False))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "kind", "width", "height", "n_frames",
-                "payload_bytes", "feat", "ok"])
+    def per_row(row):
+        raw = bytes(row[2]) if row[2] is not None else b""
+        try:
+            w, h, frames = _decode_one(raw)
+        except Exception:  # the failure row keeps the payload size
+            return [(0, 0, 0, len(raw), "", False)]
+        return [(w, h, frames, len(raw), hashlib.md5(raw).hexdigest(), True)]
 
-    return media_df.select("media_id", "kind", "payload").mapInPandas(
-        run, schema=("media_id long, kind string, width int, height int, "
+    return _map_rows(media_df.select("media_id", "kind", "payload"),
+                     "media_id long, kind string, width int, height int, "
                      "n_frames int, payload_bytes long, feat string, "
-                     "ok boolean"))
+                     "ok boolean", per_row)
 
 
 def frame_sample(media_df, every_n: int = 30):
@@ -506,28 +490,18 @@ def frame_sample(media_df, every_n: int = 30):
     per sampled frame index. Demonstrates the 1→N fan-out shape
     (mapInPandas emitting more rows than it consumes)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "frame_feat": []}
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"],
-                                          pdf["payload"]):
-                if kind != "video":
-                    continue
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    _, _, frames = _decode_one(raw)
-                except Exception:
-                    continue
-                for idx in range(0, frames, every_n):
-                    out["media_id"].append(int(mid))
-                    out["frame_idx"].append(idx)
-                    out["frame_feat"].append(
-                        hashlib.md5(raw + idx.to_bytes(4, "little"))
-                        .hexdigest())
-            yield pd.DataFrame(out)
+    def per_row(row):
+        if row[1] != "video":
+            return []
+        raw = bytes(row[2]) if row[2] is not None else b""
+        _, _, frames = _decode_one(raw)
+        return [(idx, hashlib.md5(raw + idx.to_bytes(4, "little"))
+                 .hexdigest()) for idx in range(0, frames, every_n)]
 
-    return media_df.select("media_id", "kind", "payload").mapInPandas(
-        run, schema="media_id long, frame_idx int, frame_feat string")
+    # a video that fails to decode yields no frames
+    return _map_rows(media_df.select("media_id", "kind", "payload"),
+                     "media_id long, frame_idx int, frame_feat string",
+                     per_row)
 
 
 def media_df_from_docs(spark, sf_dir: str):

@@ -4,9 +4,9 @@ Two pieces, split the way a production crawler splits them:
 
 - :func:`parse_robots_txt` — robots.txt bodies → a normalized rules
   table ``(host, rule, prefix)``. Tiny line-oriented config files, so
-  this is an Arrow-batched pandas kernel (the same honest call the
-  HTML kernel makes: imperative per-file parsing does not belong in
-  Catalyst expressions). Only ``User-agent: *`` groups apply — a
+  this runs on the shared row driver of the HTML operators
+  (``operators/extract.py``): imperative per-file parsing does not
+  belong in Catalyst expressions. Only ``User-agent: *`` groups apply — a
   production crawler would pass its token and fall back to ``*``.
 
 - :func:`robots_filter` — the scale piece: frontier urls ⋈ rules on
@@ -29,12 +29,9 @@ crawl-pipeline surface above the extraction kernel.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .extract import _map_rows
 from .urls import SCHEME_HOST_RE
 
 # strips userinfo like links.HOST_RE does — 'https://u@a.com/x' must
@@ -84,18 +81,13 @@ def parse_robots_txt(robots_df: DataFrame, host_col: str = "host",
                      body_col: str = "body") -> DataFrame:
     """(host, body) robots.txt fetches → (host, rule, prefix) rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for host, body in zip(pdf[host_col], pdf[body_col]):
-                try:
-                    rows.extend(parse_robots_lines(host, body or ""))
-                except Exception:
-                    pass  # malformed file: crawl treats as allow-all
-            yield pd.DataFrame(rows, columns=["host", "rule", "prefix"])
+    def per_row(row):
+        return [r[1:] for r in parse_robots_lines(row[0], row[1] or "")]
 
-    return robots_df.select(host_col, body_col).mapInPandas(
-        run, schema=ROBOTS_SCHEMA)
+    # a malformed file yields no rules: the crawl treats it as allow-all
+    return _map_rows(robots_df.select(robots_df[host_col].alias("host"),
+                                      robots_df[body_col].alias("body")),
+                     ROBOTS_SCHEMA, per_row)
 
 
 def robots_filter(frontier_df: DataFrame, rules_df: DataFrame,

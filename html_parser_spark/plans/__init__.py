@@ -1,5 +1,5 @@
 """Job orchestration: session tuning, skew-aware partitioning plans,
 checkpoint-resumable runs, and run reports."""
 
-from .pipeline import (configure, salted_repartition, skew_isolate,
-                       run_extraction, resume_filter, run_report)  # noqa: F401
+from .pipeline import (configure, skew_isolate, run_extraction,
+                       resume_filter, run_report)  # noqa: F401

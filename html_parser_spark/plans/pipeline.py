@@ -13,11 +13,10 @@ columns — is identical; swap ``format("parquet")`` for
 
 Why each piece exists at 10^12-document scale:
 
-- ``salted_repartition``: html sizes are Zipf-ish; a pure
-  ``repartition(hash(url))`` puts multi-MB giants next to thousands of
-  small pages and the straggler partition dominates wall-clock (AQE skew
-  handling only rebalances *joins/aggs*, not ``mapInPandas``). We salt
-  by size class: giant docs spread across ``salt_buckets`` partitions.
+- ``skew_isolate``: html sizes are Zipf-ish, and AQE skew handling
+  only rebalances *joins/aggs*, not ``mapInPandas``; so only the
+  multi-MB giant documents shuffle, into their own fine partitions,
+  while the rest stay on their byte-bounded scan splits.
 - ``resume_filter``: a left **anti join** of the source against the
   already-committed output keys. On Iceberg this reads only the
   ``url`` column of committed snapshots (column pruning), and Spark
@@ -37,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.extract import extract_pages
 
-BIG_DOC_BYTES = 1 << 20  # 1 MiB: size class boundary for salting
+BIG_DOC_BYTES = 1 << 20  # 1 MiB: the giant-document size boundary
 
 
 def configure(builder_or_spark=None, cpus: int | None = None,
@@ -78,34 +77,6 @@ def configure(builder_or_spark=None, cpus: int | None = None,
             .config("spark.driver.memory",
                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
             .getOrCreate())
-
-
-def salted_repartition(pages: DataFrame, num_partitions: int,
-                       big_doc_bytes: int = BIG_DOC_BYTES,
-                       giant_fanout: int = 4) -> DataFrame:
-    """Skew-aware url-hash repartition (size-class salting).
-
-    For ``mapInPandas`` the unit of work is the *partition*, so the
-    straggler risk is a partition whose byte-weight (not row count) is
-    dominated by multi-MB giant documents — AQE skew handling only
-    rebalances joins/aggs, not arbitrary python stages. The fix is a
-    size-class split:
-
-    - normal docs shuffle on ``xxhash64(url, salt)`` into
-      ``num_partitions`` (uniform rows, uniform bytes);
-    - giant docs (> ``big_doc_bytes``) shuffle into
-      ``num_partitions * giant_fanout`` much finer partitions, bounding
-      giants-per-partition near one so no task carries several.
-
-    Everything is deterministic in the url (no RNG): a retried task
-    re-derives the same placement.
-    """
-    h = F.xxhash64("url")
-    giants = (pages.filter(F.length("html") > big_doc_bytes)
-              .repartition(num_partitions * giant_fanout, h))
-    normal = (pages.filter(F.length("html") <= big_doc_bytes)
-              .repartition(num_partitions, h))
-    return normal.unionByName(giants)
 
 
 def skew_isolate(pages: DataFrame, giant_partitions: int,
@@ -207,19 +178,16 @@ def run_extraction(spark: SparkSession, pages: DataFrame, output_path: str,
     """End-to-end job: resume-filter → skew-aware partitioning →
     extract → atomic append → run report. Returns the report dict.
 
-    ``plan``: "isolate" (default — shuffle only giant docs),
-    "full" (url-hash repartition of everything + giant fanout, for when
-    downstream wants url co-location), or "none" (trust scan splits).
+    ``plan``: "isolate" (default — shuffle only giant docs) or "none"
+    (trust scan splits). For url co-location downstream, write the
+    output with :func:`write_bucketed`.
     """
+    if plan not in ("isolate", "none"):
+        raise ValueError(f"unknown plan {plan!r}")
     if resume:
         pages = resume_filter(pages, output_path)
     parts = num_partitions or spark.sparkContext.defaultParallelism * 2
-    if plan == "full":
-        parted = salted_repartition(pages, parts)
-    elif plan == "none":
-        parted = pages
-    else:
-        parted = skew_isolate(pages, parts)
+    parted = pages if plan == "none" else skew_isolate(pages, parts)
     result = extract_pages(parted, with_spans=with_spans)
     # tag rows with this run's id so the report covers exactly what
     # THIS run wrote — on a resumed output path the committed table

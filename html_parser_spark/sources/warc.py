@@ -13,8 +13,9 @@ actually arrive in, parsed with a stdlib-only record walker.
   (``applyInPandas``: a WARC file holds MANY records, so the test
   path exercises multi-record walking, not one-blob-per-page).
 
-- :func:`warc_records` — WARC blobs → (url, warc_ts, html) rows via
-  ``mapInPandas``; feed the result straight into ``extract_pages``.
+- :func:`warc_records` — WARC blobs → (url, warc_ts, html) rows on
+  the shared row driver (``operators/extract.py``); feed the result
+  straight into ``extract_pages``.
 
 Scale shape: both kernels are narrow Arrow-batched passes. The bucket
 grouping in ``pages_to_warc`` is one hash exchange on the bucket key
@@ -37,6 +38,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators.extract import _map_rows
+
 WARC_TS_FMT = "%Y-%m-%dT%H:%M:%SZ"
 
 WARC_RECORDS_SCHEMA = "url string, warc_ts timestamp, html binary"
@@ -56,6 +59,17 @@ def _format_warc_date(ts) -> str:
     if ts.microsecond:
         return ts.strftime(WARC_TS_FMT_US)
     return ts.strftime(WARC_TS_FMT)
+
+
+def _ns_or_none(ts: datetime | None) -> datetime | None:
+    """A parseable WARC-Date can still sit outside the datetime64[ns]
+    range (year 9999), which pandas cannot hold: such a date becomes
+    None, a NULL ``warc_ts``, instead of failing the batch."""
+    if ts is not None and not (pd.Timestamp.min.to_pydatetime(warn=False)
+                               <= ts
+                               <= pd.Timestamp.max.to_pydatetime(warn=False)):
+        return None
+    return ts
 
 
 def _clean_uri(uri: str) -> str:
@@ -143,7 +157,14 @@ def pages_to_warc(pages_df: DataFrame, n_files: int = 64) -> DataFrame:
     ``n_files`` multi-record WARC blobs, bucketed by url hash. Records
     within a blob are ordered by url so the blob bytes are a pure
     function of the bucket's row set (deterministic across
-    partitionings — the property every oracle here leans on)."""
+    partitionings — the property every oracle here leans on).
+
+    WARC-Date is mandatory, so a NULL ``warc_ts`` packs as the epoch
+    sentinel ``1970-01-01T00:00:00Z`` and reads back from
+    :func:`warc_records` as 1970-01-01 00:00:00, not as NULL. That
+    includes a date :func:`warc_records` read as NULL because it lies
+    outside the datetime64[ns] range (year 9999): repacked, it becomes
+    the epoch."""
 
     def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("url")
@@ -172,32 +193,12 @@ def warc_records(warc_df: DataFrame, warc_col: str = "warc") -> DataFrame:
     Pure map (no shuffle); malformed blobs yield their salvageable
     prefix, never a failed task."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: list[str] = []
-            tss: list = []
-            htmls: list = []
-            for blob in pdf[warc_col]:
-                if blob is None:
-                    continue
-                for uri, ts, payload in iter_warc(bytes(blob)):
-                    urls.append(uri)
-                    # a parseable WARC-Date can still sit outside the
-                    # datetime64[ns] range (year 9999): pd.Series would
-                    # raise OutOfBoundsDatetime and fail the task —
-                    # clamp such dates to missing instead
-                    if ts is not None and not (
-                            pd.Timestamp.min.to_pydatetime(warn=False)
-                            <= ts
-                            <= pd.Timestamp.max.to_pydatetime(warn=False)):
-                        ts = None
-                    tss.append(ts)
-                    htmls.append(payload)
-            yield pd.DataFrame({
-                "url": pd.Series(urls, dtype=object),
-                "warc_ts": pd.Series(tss, dtype="datetime64[ns]"),
-                "html": pd.Series(htmls, dtype=object),
-            })
+    def per_row(row):
+        # a NULL blob raises in bytes() and yields no row
+        return [(uri, _ns_or_none(ts), payload)
+                for uri, ts, payload in iter_warc(bytes(row[0]))]
 
-    return warc_df.select(warc_col).mapInPandas(
-        run, schema=WARC_RECORDS_SCHEMA)
+    # aliased: a blob column named like an output column (say ``html``)
+    # would otherwise pass through in its place
+    return _map_rows(warc_df.select(warc_df[warc_col].alias("warc")),
+                     WARC_RECORDS_SCHEMA, per_row)

@@ -7,7 +7,7 @@ Usage (cluster):
         --conf spark.sql.files.maxPartitionBytes=16777216 \
         jobs/extract_job.py \
         --input <pages table path or name> --output <output path> \
-        [--plan isolate|full|none] [--no-resume] [--spans]
+        [--plan isolate|none] [--no-resume] [--spans]
 
 Input modes (mutually exclusive): --input (pages parquet path or
 catalog table), --warc-input (parquet of (warc_id, warc binary) WARC
@@ -46,7 +46,7 @@ def main(argv: list[str] | None = None) -> int:
                           "into (url, warc_ts, html) before extraction")
     ap.add_argument("--output", required=True)
     ap.add_argument("--plan", default="isolate",
-                    choices=["isolate", "full", "none"])
+                    choices=["isolate", "none"])
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--spans", action="store_true",
                     help="emit element spans (larger output)")

@@ -1,5 +1,5 @@
 """Spark-side integration tests: pages synthesis → extraction golden
-equality, checkpoint-resume, skew repartition, dedup/similarity/
+equality, checkpoint-resume, skew isolation, dedup/similarity/
 multimodal operators. Kept at sf0.001 (500 docs) on local[4] so the
 whole module runs in well under a minute of compute."""
 
@@ -93,30 +93,9 @@ def test_run_extraction_resume(spark, pages):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_salted_repartition_spreads_giants(spark, pages):
-    from html_parser_spark.plans.pipeline import salted_repartition
-    parts = salted_repartition(pages, num_partitions=4,
-                               big_doc_bytes=10_000, giant_fanout=4)
-    dist = (parts.withColumn("pid", F.spark_partition_id())
-            .withColumn("giant", F.length("html") > 10_000)
-            .groupBy("pid")
-            .agg(F.sum(F.col("giant").cast("int")).alias("giants"),
-                 F.count("*").alias("docs"))
-            .collect())
-    n_giants = sum(r["giants"] for r in dist)
-    assert n_giants > 0  # the corpus does contain giants
-    # giants never share a partition with the bulk corpus
-    for r in dist:
-        if r["giants"]:
-            assert r["docs"] == r["giants"]
-    # and they spread over multiple partitions
-    assert sum(1 for r in dist if r["giants"]) >= min(3, n_giants)
-
-
 def test_lineage_counters(spark, pages):
     from html_parser_spark.operators.extract import extract_pages
-    from html_parser_spark.plans.pipeline import salted_repartition
-    out = extract_pages(salted_repartition(pages, 4), with_spans=False)
+    out = extract_pages(pages.repartition(4), with_spans=False)
     per_part = out.groupBy("part_id").count().collect()
     assert len(per_part) > 1  # lineage ids actually vary by partition
     assert all(r["part_id"] >= 0 for r in per_part)
@@ -349,21 +328,20 @@ def test_winnow_guarantee_shared_substring(spark):
 
 
 def test_run_extraction_full_plan_and_none_plan(spark, pages):
-    """The url-co-location plan (full salted repartition) and the
-    trust-scan-splits plan must produce byte-identical outputs to the
-    default isolate plan."""
+    """The trust-scan-splits plan must produce byte-identical outputs
+    to the default isolate plan; the removed "full" plan is refused."""
     from html_parser_spark.plans.pipeline import run_extraction
     tmp = tempfile.mkdtemp(prefix="hps_plans_")
     try:
         golden = pages.select("url", F.col("text").alias("g"))
-        for plan in ("full", "none"):
-            r = run_extraction(spark, pages, f"{tmp}/{plan}",
-                               num_partitions=4, with_spans=False,
-                               plan=plan)
-            assert r["docs"] == 500
-            out = spark.read.parquet(f"{tmp}/{plan}")
-            j = out.join(golden, "url")
-            assert j.filter(F.col("text") != F.col("g")).count() == 0
+        r = run_extraction(spark, pages, f"{tmp}/none", num_partitions=4,
+                           with_spans=False, plan="none")
+        assert r["docs"] == 500
+        out = spark.read.parquet(f"{tmp}/none")
+        j = out.join(golden, "url")
+        assert j.filter(F.col("text") != F.col("g")).count() == 0
+        with pytest.raises(ValueError):
+            run_extraction(spark, pages, f"{tmp}/full", plan="full")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -526,37 +504,155 @@ def test_html_operator_normal_null_and_garbage_rows(spark, op):
         assert spans[1:] == [[], []]
 
 
+def _row_cases():
+    """operator -> (call, input DDL, input rows, expected output rows).
+
+    Each input batch holds, in order, a normal row, a NULL-key row, a
+    NULL-payload row and a garbage-payload row. ``warc_records`` reads
+    only a blob, so its NULL-key row is a record packed from a NULL url
+    (an empty WARC-Target-URI, as ``pages_to_warc`` writes it)."""
+    import hashlib
+    import json
+    from datetime import datetime
+
+    from html_parser_spark.operators import (conformance, fragment,
+                                             multimodal as mm, robots)
+    from html_parser_spark.operators.extract import extract_pdf_pages
+    from html_parser_spark.sources.pdfs import build_pdf
+    from html_parser_spark.sources.warc import build_warc, warc_records
+
+    garbage = bytes(range(256)) * 4
+    pdf = build_pdf(1, "alpha beta gamma", "en", "t")[1]
+    enc = json.dumps({"input_hex": b"<meta charset=utf-8>".hex(),
+                      "expected": "utf-8"})
+    ts = datetime(2025, 3, 1, 12, 0, 0)
+    gif61, gif65 = mm.make_gif(61), mm.make_gif(65)
+    images = [(8, "image", mm.make_png(8), 0, 0),
+              (None, "image", mm.make_png(12), 0, 0),
+              (16, "image", None, 0, 0), (20, "image", garbage, 0, 0)]
+    videos = [(61, "video", gif61, 0, 0), (None, "video", gif65, 0, 0),
+              (69, "video", None, 0, 0), (73, "video", garbage, 0, 0)]
+
+    def conformance_results(df):
+        cases = [tuple(r) for r in df.collect()]
+        orig = conformance.load_all_cases
+        conformance.load_all_cases = lambda: cases
+        try:
+            return conformance.conformance_results(df.sparkSession)
+        finally:
+            conformance.load_all_cases = orig
+
+    def frames(mid, raw):
+        return [(mid, i, hashlib.md5(raw + i.to_bytes(4, "little"))
+                 .hexdigest()) for i in (0, 30, 60)]
+
+    text = "Doc 1\nalpha beta gamma\nlang=en\nesc(\\)"
+    return {
+        "extract_pdf_pages": (
+            extract_pdf_pages, "url string, pdf binary",
+            [("u-ok", pdf), (None, pdf), ("u-null", None),
+             ("u-garbage", garbage)],
+            [("u-ok", text, True, len(text)), (None, text, True, len(text)),
+             ("u-null", "", False, 0), ("u-garbage", "", False, 0)]),
+        "parse_fragments": (
+            fragment.parse_fragments, "id long, snippet string",
+            [(1, "<p>Hi <b>there</p>"), (None, "<i>k</i>"), (3, None),
+             (4, "\x00<\ufffd</table><td>x")],
+            [(1, "Hi there", "<p>Hi <b>there</b></p>", True),
+             (None, "k", "<i>k</i>", True), (3, "", "", True),
+             (4, "<\ufffdx", "&lt;\ufffdx", True)]),
+        "parse_robots_txt": (
+            robots.parse_robots_txt, "host string, body string",
+            [("a.com", "User-agent: *\nDisallow: /d\n"),
+             (None, "User-agent: *\nAllow: /n\n"), ("c.com", None),
+             ("d.com", "\x00\xff: :\nUser-agent\nDisallow /x")],
+            [("a.com", "disallow", "/d"), (None, "allow", "/n")]),
+        "image_ahash": (
+            mm.image_ahash, mm.MEDIA_SCHEMA, images,
+            [(8, 21, 73, 6172822803249408597),
+             (None, 72, 71, -2749208047118657064)]),
+        "decode_media": (
+            mm.decode_media, mm.MEDIA_SCHEMA, videos,
+            [(61, "video", *mm.video_params(61), len(gif61),
+              hashlib.md5(gif61).hexdigest(), True),
+             (None, "video", *mm.video_params(65), len(gif65),
+              hashlib.md5(gif65).hexdigest(), True),
+             (69, "video", 0, 0, 0, 0, "", False),
+             (73, "video", 0, 0, 0, len(garbage), "", False)]),
+        "frame_sample": (
+            mm.frame_sample, mm.MEDIA_SCHEMA, videos,
+            frames(61, gif61) + frames(None, gif65)),
+        "conformance_results": (
+            conformance_results, "case_id string, kind string, "
+            "payload string",
+            [("c-ok", "encoding", enc), (None, "encoding", enc),
+             ("c-null", "tree", None), ("c-garbage", "tree", "\x00{")],
+            [("c-ok", "encoding", True), (None, "encoding", True),
+             ("c-null", "tree", False), ("c-garbage", "tree", False)]),
+        "warc_records": (
+            warc_records, "warc binary",
+            [(build_warc([("https://a.example/", ts, b"<p>a</p>")]),),
+             (build_warc([("", ts, b"<p>n</p>")]),), (None,), (garbage,)],
+            [("https://a.example/", ts, b"<p>a</p>"),
+             ("", ts, b"<p>n</p>")]),
+    }
+
+
+@pytest.mark.parametrize("op", ["extract_pdf_pages", "parse_fragments",
+                                "parse_robots_txt", "image_ahash",
+                                "decode_media", "frame_sample",
+                                "conformance_results", "warc_records"])
+def test_row_operator_normal_null_and_garbage_rows(spark, op):
+    """Every non-HTML per-row operator over one batch holding a normal
+    row, a NULL-key row, a NULL-payload row and a garbage-payload row:
+    the task succeeds, the NULL key rides through as NULL next to the
+    row's real output (it used to fail the task in parse_fragments,
+    decode_media and frame_sample, and drop the image in image_ahash),
+    and the payload rows give the operator's failure row or no row."""
+    call, ddl, rows, want = _row_cases()[op]
+    df = spark.createDataFrame(rows, ddl).coalesce(1)
+    got = [tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+           for r in call(df).collect()]  # a failed task raises here
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+
+
 def test_page_kernel_caps_isolates_and_restores_gc():
-    """The shared batch function on local pandas, no Spark: NULL html
-    reaches the operator as b"", the cap cuts before the operator sees
-    the bytes and is flagged, a raising document yields the failure row
-    (or no row when the operator declares none), lineage defaults to
-    part_id -1, and the collector is off while batches stream and back
-    on once the generator is closed, even mid-stream. The heap alive
-    before the first batch is frozen out of the per-batch collections
-    while the generator lives and unfrozen when it closes, unless the
-    caller had frozen it already."""
+    """The row driver and the HTML step on local pandas, no Spark: NULL
+    html reaches the operator as b"", the cap cuts before the operator
+    sees the bytes and is flagged, a raising document yields the
+    failure row with its size (or no row when the operator declares
+    none), every input column the schema names passes through by name
+    (a NULL key as NULL, never touched by the operator), lineage
+    defaults to part_id -1, and the collector is off while batches
+    stream and back on once the generator is closed, even mid-stream.
+    The heap alive before the first batch is frozen out of the
+    per-batch collections while the generator lives and unfrozen when
+    it closes, unless the caller had frozen it already."""
     import gc
 
     import pandas as pd
 
-    from html_parser_spark.operators.extract import _page_kernel
+    from html_parser_spark.operators.extract import _page_rows, _row_kernel
 
     def per_doc(url, raw, row):
         if url == "boom":
             raise ValueError(url)
-        return [(raw.decode(), row[2])]
+        return [(raw.decode(),)]
 
     schema = ("url string, seen string, tag long, html_bytes long, "
               "truncated boolean, part_id int, batch_seq long")
-    pdf = pd.DataFrame({"url": ["long", "null", "boom"],
-                        "html": [b"abcdefgh", None, b"xyz"],
-                        "tag": [1, 2, 3]})
+    pdf = pd.DataFrame({"url": ["long", "null", "boom", None],
+                        "html": [b"abcdefgh", None, b"xyz", b"k"],
+                        "tag": [1, 2, 3, 4]})
+
+    def kernel(fail=None, **page):
+        return _row_kernel(schema, _page_rows(schema, list(pdf.columns),
+                                              per_doc, fail, **page))
+
     assert gc.isenabled() and gc.get_freeze_count() == 0
-    for fail, want_boom in ((("failed", -1), [("failed", -1, 3, False)]),
+    for fail, want_boom in ((("failed",), [("failed", 3, 3, False)]),
                             (None, [])):
-        gen = _page_kernel(schema, per_doc, fail, max_html_bytes=4)(
-            iter([pdf, pdf]))
+        gen = kernel(fail, max_html_bytes=4)(iter([pdf, pdf]))
         first = next(gen)
         assert not gc.isenabled()
         assert gc.get_freeze_count() > 0
@@ -566,6 +662,7 @@ def test_page_kernel_caps_isolates_and_restores_gc():
         got = {r[0]: r[1:5] for r in first.itertuples(index=False)}
         assert got.pop("long") == ("abcd", 1, 4, True)
         assert got.pop("null") == ("", 2, 0, False)
+        assert got.pop(None) == ("k", 4, 1, False)  # NULL key rides through
         assert [got[u] for u in got] == want_boom
         assert set(first["part_id"]) == {-1}
         assert set(next(gen)["batch_seq"]) == {1}
@@ -574,14 +671,14 @@ def test_page_kernel_caps_isolates_and_restores_gc():
         assert gc.isenabled()
         assert gc.get_freeze_count() == 0
     # closed at the end of the stream
-    gen = _page_kernel(schema, per_doc)(iter([pdf]))
+    gen = kernel()(iter([pdf]))
     assert len(list(gen)) == 1
     assert gc.isenabled() and gc.get_freeze_count() == 0
     # a caller that froze its own heap keeps it frozen (compare with
     # > 0: frozen temporaries are freed by refcount, so the count drifts)
     gc.freeze()
     try:
-        gen = _page_kernel(schema, per_doc)(iter([pdf, pdf]))
+        gen = kernel()(iter([pdf, pdf]))
         next(gen)
         assert not gc.isenabled() and gc.get_freeze_count() > 0
         gen.close()
@@ -590,12 +687,26 @@ def test_page_kernel_caps_isolates_and_restores_gc():
         gc.unfreeze()
     # an empty batch still carries every column, as object columns
     # that Arrow casts to any type
-    gen = _page_kernel(schema, per_doc)(iter([pdf.iloc[:0]]))
+    gen = kernel()(iter([pdf.iloc[:0]]))
     empty = next(gen)
     gen.close()
-    assert len(empty) == 0 and len(empty.columns) == 7
+    assert list(empty.columns) == list(first.columns) and len(empty) == 0
     assert all(t == object for t in empty.dtypes)
     assert gc.isenabled() and gc.get_freeze_count() == 0
+    # the driver alone: a NULL long key reaches pandas as NaN and passes
+    # through untouched; a raising row gives the failure row, or no row
+    ids = pd.DataFrame({"id": [1.0, float("nan"), 3.0],
+                        "snippet": ["a", "b", None]})
+    for fail, want in ((("", False), [("A", True), ("B", True),
+                                      ("", False)]),
+                       (None, [("A", True), ("B", True)])):
+        out = next(_row_kernel("id long, text string, ok boolean",
+                               lambda row: [(row[1].upper(), True)],
+                               fail)(iter([ids])))
+        assert list(out.columns) == ["id", "text", "ok"]
+        assert list(zip(out["text"], out["ok"])) == want
+        assert out["id"].iloc[0] == 1 and pd.isna(out["id"].iloc[1])
+        assert list(out["id"].iloc[2:]) == ([3] if fail else [])
 
 
 def test_bounded_zlib_defuses_deflate_bomb():
@@ -1888,6 +1999,34 @@ def test_warc_pack_null_url_round_trips(spark):
            for r in warc_records(pages_to_warc(pages, n_files=4)).collect()}
     assert got == {("https://a.example/1", ts, b"<p>one</p>"),
                    ("", ts, b"<p>two</p>")}
+
+
+def test_warc_null_and_out_of_range_dates_repack_as_epoch(spark):
+    """A NULL warc_ts packs as the 1970 epoch sentinel and reads back as
+    1970-01-01, not NULL. A WARC-Date outside datetime64[ns] (year
+    9999) reads back as NULL, so repacking it writes the epoch too:
+    pack -> unpack -> repack -> unpack ends at the epoch for both."""
+    from datetime import datetime
+
+    from html_parser_spark.sources.warc import (build_warc, pages_to_warc,
+                                                warc_records)
+
+    epoch = datetime(1970, 1, 1)
+    far = build_warc([("https://far.example/", datetime(9999, 1, 1),
+                       b"<p>far</p>")])
+    blobs = spark.createDataFrame(
+        [("far", far), ("nul", pages_to_warc(spark.createDataFrame(
+            [("https://nul.example/", None, b"<p>nul</p>")],
+            "url string, warc_ts timestamp, html binary")).first()["warc"])],
+        "warc_id string, warc binary")
+    once = warc_records(blobs)
+    assert {(r["url"], r["warc_ts"]) for r in once.collect()} == {
+        ("https://far.example/", None), ("https://nul.example/", epoch)}
+    again = warc_records(pages_to_warc(once, n_files=2))
+    assert {(r["url"], r["warc_ts"], bytes(r["html"]))
+            for r in again.collect()} == {
+        ("https://far.example/", epoch, b"<p>far</p>"),
+        ("https://nul.example/", epoch, b"<p>nul</p>")}
 
 
 def test_warc_walker_pathological_inputs():
