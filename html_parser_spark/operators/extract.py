@@ -33,7 +33,7 @@ Scale notes (100 TB / 10^12 docs):
 - **Arrow batch sizing.** Cells are whole html documents (KBs-MBs), so
   the default 10k-rows-per-batch would make multi-GB batches. Callers
   must set ``spark.sql.execution.arrow.maxRecordsPerBatch`` to ~64-128
-  (done in ``plans.pipeline.configure``).
+  and ``maxBytesPerBatch`` to a few MiB (``plans.pipeline.configure``).
 - **Bounded memory.** Per-document work is O(doc size), and the HTML
   step hard-caps every document at ``max_html_bytes`` (64 MiB unless the
   operator takes the kwarg) before any operator sees it: pathological
@@ -52,8 +52,8 @@ Scale notes (100 TB / 10^12 docs):
   generator made since. When the generator closes it unfreezes what
   it froze and re-enables the collector. A caller whose heap is
   already frozen keeps it frozen; the driver then freezes nothing.
-- **Counters, not lists.** Parse errors become per-doc counts plus
-  per-partition counter rows; full error tuples never leave the executor
+- **Counters, not lists.** Parse errors become per-doc counts (summed
+  by the run report); full error tuples never leave the executor
   (the reference gates error collection the same way for performance —
   /root/reference/lib/Parser/Data.php:56-57).
 - **Lineage.** Every ``extract_pages`` row carries the executor

@@ -2,4 +2,4 @@
 checkpoint-resumable runs, and run reports."""
 
 from .pipeline import (configure, skew_isolate, run_extraction,
-                       resume_filter, run_report)  # noqa: F401
+                       resume_filter)  # noqa: F401

@@ -22,8 +22,8 @@ Why each piece exists at 10^12-document scale:
   ``url`` column of committed snapshots (column pruning), and Spark
   broadcast-joins it when small or shuffle-joins both sides when not —
   either way the re-run never re-parses committed documents.
-- ``run_report``: per-partition counters aggregated JVM-side
-  (groupBy/sum — a map-side-combinable agg, one small shuffle).
+- the run report: ``DataFrame.observe`` on the written frame sums the
+  counters inside the write's own tasks (no re-read, no groupBy job).
 """
 
 from __future__ import annotations
@@ -32,7 +32,8 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..operators.extract import extract_pages
 
@@ -44,8 +45,8 @@ def configure(builder_or_spark=None, cpus: int | None = None,
               arrow_batch: int = 64):
     """Build (or tune) a SparkSession for the extraction workload.
 
-    - Arrow batches capped at ``arrow_batch`` docs (cells are MB-scale;
-      the 10k default would build multi-GB Arrow buffers).
+    - Arrow batches capped at ``arrow_batch`` docs and 4 MiB (cells are
+      MB-scale: a one-wave giant partition would batch a dozen giants).
     - AQE on: runtime coalescing of the post-shuffle partitions.
     - ``files.maxPartitionBytes`` left at default for parquet; on Iceberg
       use the table's split size.
@@ -64,6 +65,8 @@ def configure(builder_or_spark=None, cpus: int | None = None,
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
             .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                     str(arrow_batch))
+            .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                    str(4 << 20))
             # html cells are KB-MB and the per-byte python parse cost is
             # ~100× a columnar scan's, so the default 128 MB splits leave
             # the scan/shuffle-map stage under-parallelized: a 16 MB split
@@ -87,10 +90,12 @@ def skew_isolate(pages: DataFrame, giant_partitions: int,
     ``files.maxPartitionBytes`` at 16 MB the per-task byte-weight is
     already bounded, and an embarrassingly-parallel parse needs no
     co-location — so <1% of corpus bytes move. Giant documents (the
-    straggler risk: several multi-MB docs clumped in one split) get
-    their own fine-grained partitions, ~1 doc each, via a deterministic
-    url-hash shuffle. At 100 TB this is the difference between
-    shuffling 100 TB and shuffling <1 TB.
+    straggler risk: several multi-MB docs clumped in one split) spread
+    over ``giant_partitions`` by a deterministic url-hash shuffle —
+    one wave, a partition per core, in ``run_extraction``: each extra
+    Python task costs ~0.25 s of worker CPU before it sees a row. At
+    100 TB this is the difference between shuffling 100 TB and
+    shuffling <1 TB.
 
     Costs one extra scan of the source (two filters); scans are cheap
     relative to the parse, and on Iceberg the giant side could instead
@@ -105,13 +110,21 @@ def skew_isolate(pages: DataFrame, giant_partitions: int,
 
 def resume_filter(pages: DataFrame, output_path: str) -> DataFrame:
     """Drop documents whose url is already committed at output_path
-    (checkpoint resume — snapshot-based, not streaming)."""
-    spark = pages.sparkSession
+    (checkpoint resume — snapshot-based, not streaming). Only a missing
+    path reads as "nothing committed"; other read errors propagate."""
     try:
-        done = spark.read.parquet(output_path).select("url")
-    except Exception:  # first run: nothing committed yet
-        return pages
+        done = _committed(pages.sparkSession, output_path)
+    except AnalysisException as ex:
+        if ex.getCondition() == "PATH_NOT_FOUND":  # first run
+            return pages
+        raise
     return pages.join(done, "url", "left_anti")
+
+
+def _committed(spark: SparkSession, output_path: str) -> DataFrame:
+    """The committed urls through an explicit schema: no schema-inference
+    job, and files of any earlier version of the job still read."""
+    return spark.read.schema("url string").parquet(output_path)
 
 
 def incremental_extract(old: DataFrame, new: DataFrame,
@@ -186,29 +199,39 @@ def run_extraction(spark: SparkSession, pages: DataFrame, output_path: str,
         raise ValueError(f"unknown plan {plan!r}")
     if resume:
         pages = resume_filter(pages, output_path)
-    parts = num_partitions or spark.sparkContext.defaultParallelism * 2
+    parts = num_partitions or spark.sparkContext.defaultParallelism
     parted = pages if plan == "none" else skew_isolate(pages, parts)
-    result = extract_pages(parted, with_spans=with_spans)
-    # tag rows with this run's id so the report covers exactly what
-    # THIS run wrote — on a resumed output path the committed table
-    # holds earlier runs too (whole-table totals stay a separate field)
+    # run_id tags the rows THIS run wrote; the committed table holds
+    # earlier runs too (whole-table totals are a separate field)
     rid = uuid.uuid4().hex
-    result = result.withColumn("run_id", F.lit(rid))
+    obs = Observation()
+    result = (extract_pages(parted, with_spans=with_spans)
+              .withColumn("run_id", F.lit(rid))
+              .observe(obs, *report_aggs()))
     t0 = time.monotonic()
     result.write.mode("append").parquet(output_path)
     wall = time.monotonic() - t0
-    # mergeSchema: a resumed output path may hold files written by a
-    # pre-run_id version of this job (no run_id column); plain schema
-    # inference could then pick a file without the column and make the
-    # filter below fail to resolve. Old rows surface run_id=NULL and
-    # are excluded by the equality filter, which is what we want.
-    committed = spark.read.option("mergeSchema", "true") \
-        .parquet(output_path)
-    report = run_report(committed.filter(F.col("run_id") == rid))
+    report = {k: int(v or 0) for k, v in obs.get.items()}  # NULL sums: 0 rows
     report["run_id"] = rid
     report["wall_s"] = round(wall, 3)
-    report["table_docs"] = _table_rows_from_metadata(committed)
+    report["table_docs"] = _table_rows_from_metadata(
+        _committed(spark, output_path))
     return report
+
+
+def report_aggs() -> list:
+    """The run report's aggregates over extraction output rows. Observed
+    on the written frame, they ride the write's own tasks. A failed
+    document is the failure arm's ``n_errors = -1`` row."""
+    return [F.count(F.lit(1)).alias("docs"),
+            F.sum("html_bytes").alias("bytes"),
+            F.sum("n_errors").alias("errors"),
+            F.sum("n_tokens").alias("tokens"),
+            F.sum("n_elements").alias("elements"),
+            F.sum(F.col("truncated").cast("long")).alias("truncated"),
+            F.count_if(F.col("n_errors") < 0).alias("failed"),
+            F.approx_count_distinct("url").alias("approx_unique_urls"),
+            F.approx_count_distinct("part_id").alias("partitions")]
 
 
 def _table_rows_from_metadata(committed: DataFrame) -> int:
@@ -252,33 +275,6 @@ def _table_rows_from_metadata(committed: DataFrame) -> int:
             # which subclasses ValueError, not OSError. Fall back to
             # the scan rather than crash the run report.
             return committed.count()
-    return total
-
-
-def run_report(out: DataFrame) -> dict:
-    """Aggregate per-partition lineage counters into a run report.
-    All JVM-side: one partial-aggregated shuffle over tiny data."""
-    per_part = (out.groupBy("part_id")
-                .agg(F.count("*").alias("docs"),
-                     F.approx_count_distinct("url").alias("approx_urls"),
-                     F.sum("html_bytes").alias("bytes"),
-                     F.sum("n_errors").alias("errors"),
-                     F.sum("n_tokens").alias("tokens"),
-                     F.sum("n_elements").alias("elements"),
-                     F.sum(F.col("truncated").cast("long")).alias("truncated"))
-                .collect())
-    total = {
-        "docs": sum(r["docs"] for r in per_part),
-        "bytes": int(sum(r["bytes"] or 0 for r in per_part)),
-        "errors": int(sum(r["errors"] or 0 for r in per_part)),
-        "tokens": int(sum(r["tokens"] or 0 for r in per_part)),
-        "elements": int(sum(r["elements"] or 0 for r in per_part)),
-        "truncated": int(sum(r["truncated"] or 0 for r in per_part)),
-        "approx_unique_urls": int(sum(r["approx_urls"] for r in per_part)),
-        "partitions": len(per_part),
-    }
-    total["per_partition"] = {int(r["part_id"]): int(r["docs"])
-                              for r in per_part}
     return total
 
 

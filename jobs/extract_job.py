@@ -4,6 +4,7 @@ Usage (cluster):
     zip -r hps.zip html_parser_spark
     spark-submit --py-files hps.zip \
         --conf spark.sql.execution.arrow.maxRecordsPerBatch=64 \
+        --conf spark.sql.execution.arrow.maxBytesPerBatch=4194304 \
         --conf spark.sql.files.maxPartitionBytes=16777216 \
         jobs/extract_job.py \
         --input <pages table path or name> --output <output path> \
@@ -21,8 +22,8 @@ Usage (sandbox smoke, synthesizes pages from the test documents table):
 The job is idempotent/resumable: every run anti-joins the source
 against already-committed output urls and appends only the remainder
 (north rule: "resumable from checkpoint with per-partition lineage +
-metrics"). The run report (docs, bytes, errors, truncated, partition
-histogram) prints as one JSON line.
+metrics"). The run report (docs, bytes, errors, truncated, failed,
+partitions), observed on the write itself, prints as one JSON line.
 """
 
 from __future__ import annotations
@@ -50,7 +51,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--spans", action="store_true",
                     help="emit element spans (larger output)")
-    ap.add_argument("--num-partitions", type=int, default=None)
+    ap.add_argument("--num-partitions", type=int, default=None,
+                    help="giant-doc partitions; default: one wave (1/core)")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession

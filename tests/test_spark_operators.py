@@ -67,7 +67,11 @@ def test_spans_offsets_consistent(spark, pages):
 
 
 def test_run_extraction_resume(spark, pages):
+    """Each run parses only the urls not yet committed, and its report
+    (observed on the write) equals a groupBy over the rows it wrote."""
     from html_parser_spark.plans.pipeline import run_extraction
+    keys = ("docs", "bytes", "errors", "tokens", "elements", "truncated",
+            "failed")
     tmp = tempfile.mkdtemp(prefix="hps_out_")
     try:
         first = pages.filter(F.crc32(F.col("url")) % 2 == 0)
@@ -87,10 +91,48 @@ def test_run_extraction_resume(spark, pages):
                             with_spans=False)
         assert r3["docs"] == 0
         assert r3["table_docs"] == 500
-        urls = spark.read.parquet(f"{tmp}/out").select("url")
-        assert urls.count() == urls.distinct().count() == 500
+        out = spark.read.parquet(f"{tmp}/out")
+        assert out.count() == out.select("url").distinct().count() == 500
+        by_run = {r["run_id"]: r.asDict() for r in out.groupBy("run_id").agg(
+            F.count("*").alias("docs"),
+            F.sum("html_bytes").alias("bytes"),
+            F.sum("n_errors").alias("errors"),
+            F.sum("n_tokens").alias("tokens"),
+            F.sum("n_elements").alias("elements"),
+            F.sum(F.col("truncated").cast("long")).alias("truncated"),
+            F.sum((F.col("n_errors") < 0).cast("long")).alias("failed"),
+        ).collect()}
+        assert set(by_run) == {r1["run_id"], r2["run_id"]}
+        for r in (r1, r2, r3):
+            want = by_run.get(r["run_id"], dict.fromkeys(keys, 0))
+            assert {k: r[k] for k in keys} == {k: want[k] for k in keys}
+            assert "per_partition" not in r
+        assert r2["approx_unique_urls"] > 0 and r2["partitions"] > 0
+        assert r3["approx_unique_urls"] == r3["partitions"] == 0
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_resume_reads_only_a_missing_path_as_nothing_committed(
+        spark, pages, tmp_path):
+    """A missing, empty or ``_temporary``-only output path means nothing
+    is committed; an unreadable committed file fails the run before it
+    appends anything (it used to re-parse and append everything)."""
+    import os
+
+    from html_parser_spark.plans.pipeline import resume_filter, run_extraction
+    few = pages.limit(20)
+    (tmp_path / "empty").mkdir()
+    (tmp_path / "aborted" / "_temporary" / "0").mkdir(parents=True)
+    for name in ("missing", "empty", "aborted"):
+        assert resume_filter(few, str(tmp_path / name)).count() == 20
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "part-0.parquet").write_bytes(b"not a parquet file" * 64)
+    with pytest.raises(Exception):
+        run_extraction(spark, few, str(bad), with_spans=False)
+    files = [f for _, _, fs in os.walk(bad) for f in fs]
+    assert files == ["part-0.parquet"]
 
 
 def test_lineage_counters(spark, pages):
@@ -388,7 +430,10 @@ def test_extract_failures_truncation_and_failure_isolation(spark, pages):
     that document without failing the task or disturbing neighbors."""
     import zlib
 
+    from pyspark.sql import Observation
+
     from html_parser_spark.operators.extract import bounded_zlib, extract_pages
+    from html_parser_spark.plans.pipeline import report_aggs
 
     cap = 64 * 1024
     out = extract_pages(pages, max_html_bytes=cap, with_spans=False)
@@ -412,10 +457,15 @@ def test_extract_failures_truncation_and_failure_isolation(spark, pages):
 
     compressed = pages.select("url", "html").mapInPandas(
         gz, schema="url string, html binary")
+    obs = Observation()
     failed = extract_pages(compressed, with_spans=False,
-                           preprocess=bounded_zlib(cap))
+                           preprocess=bounded_zlib(cap)) \
+        .observe(obs, *report_aggs())
     res = {r["url"]: r for r in
            failed.select("url", "encoding", "n_errors").collect()}
+    # the run report's aggregates count the failure arm's row
+    assert obs.get["failed"] == 1
+    assert obs.get["docs"] == 500
     assert res[poison]["encoding"] == "error"
     assert res[poison]["n_errors"] == -1
     ok = [r for u, r in res.items() if u != poison]
