@@ -2,10 +2,14 @@
 provideCustomSerializations cases (TestSerializer.php, read in place)
 through our configurable serializer — boolean attribute values,
 foreign void end tags, and the whitespace-reformatting pretty-printer.
+
+The provider cases are skipped when the reference checkout is absent;
+the other tests build their own inputs and always run.
 """
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -55,10 +59,15 @@ def _load_cases():
     return out
 
 
-_CASES = _load_cases()
-assert len(_CASES) >= 16  # the bundled provider
+if os.path.isfile(_REF):
+    _CASES = _load_cases()
+    assert len(_CASES) >= 16  # the bundled provider
+else:
+    _CASES = []
 
 
+@pytest.mark.skipif(not os.path.isfile(_REF),
+                    reason="reference checkout not present")
 @pytest.mark.parametrize(
     "cid,frag,ctx,step,spaces,pi,reformat,boolattr,fvoid,inp,exp",
     _CASES, ids=[c[0] for c in _CASES])
