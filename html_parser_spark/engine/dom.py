@@ -95,7 +95,7 @@ class DocumentType(Node):
 
 
 class Element(ParentNode):
-    __slots__ = ("name", "namespace", "attrs", "content", "skey")
+    __slots__ = ("name", "namespace", "attrs", "content", "skey", "on_stack")
 
     def __init__(self, name: str, namespace: str = HTML_NS, attrs: dict | None = None) -> None:
         # fields inlined (no super() chain): Element construction is one
@@ -109,6 +109,10 @@ class Element(ParentNode):
         # are immutable after construction so the tuple is built once
         self.skey = (namespace, name)
         self.attrs: dict = attrs if attrs is not None else {}
+        # times this element sits on a tree builder's stack of open
+        # elements (kept by treebuilder.ElementStack): an O(1) "is it
+        # open" test where a list scan would make parsing quadratic
+        self.on_stack = 0
         # <template> contents live in a separate fragment, not in children
         # (WHATWG "template contents"; the reference flattens them due to a
         # PHP limitation, /root/reference/README.md:216 — we implement the

@@ -29,9 +29,10 @@ def text_content(node) -> str:
     stack = [node]
     while stack:
         n = stack.pop()
-        if isinstance(n, Text):
+        t = type(n)  # exact types: the DOM classes are not subclassed
+        if t is Text:
             parts.append(n.data)
-        elif isinstance(n, (Element, Document, DocumentFragment)):
+        elif t is Element or t is Document or t is DocumentFragment:
             stack.extend(reversed(n.children))
     return "".join(parts)
 

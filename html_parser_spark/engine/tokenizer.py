@@ -316,6 +316,7 @@ class Tokenizer:
     def tokenize(self):
         s = self.s
         n = self.n
+        lower_get = _LOWER_CACHE.get  # the cache is cleared, never rebound
         self._scan_input_stream()
         while True:
             state = self.state
@@ -333,8 +334,7 @@ class Tokenizer:
                 tag_tok = None
                 lt_pos = 0
                 while pos < n:
-                    m = _DATA_CHUNK.match(s, pos)
-                    piece = m.group(1)
+                    piece, slash, raw = _DATA_CHUNK.match(s, pos).groups()
                     if piece:
                         if text is None:
                             text = piece
@@ -342,23 +342,26 @@ class Tokenizer:
                             buf = [text, piece]
                         else:
                             buf.append(piece)
-                    raw = m.group(3)
+                    pos += len(piece)
                     if raw is not None and "\x00" not in raw:
                         # fused bare-tag hit: token built here, no
                         # _tag_name call, no attribute loop. lt_pos
                         # (the '<') is where self.pos must sit while
                         # the preceding CHARS token is processed —
-                        # tree errors blame tokenizer.pos-1.
-                        lt_pos = m.end(1)
-                        pos = m.end()
-                        name = _lower(raw)
-                        if m.group(2):
+                        # tree errors blame tokenizer.pos-1. The match
+                        # ends after '<', the optional '/', the name
+                        # and '>'.
+                        lt_pos = pos
+                        pos += len(slash) + len(raw) + 2
+                        name = lower_get(raw)
+                        if name is None:
+                            name = _lower(raw)
+                        if slash:
                             tag_tok = (END, name)
                         else:
                             self.last_start_tag = name
                             tag_tok = (START, name, {}, False)
                         break
-                    pos = m.end(1)
                     if pos >= n:
                         break
                     c = s[pos]

@@ -82,6 +82,10 @@ _NONWS_RE = _re.compile(r"[^\t\n\f ]")
 # branches: <a> runs the duplicate-AFE check, <nobr> the in-scope
 # implied close) — derived, so a tables.FORMATTING edit cannot drift
 _INLINE_FORMATTING = FORMATTING - frozenset(("a", "nobr"))
+# start tags TreeBuilder.run inserts itself: True for a block container
+# (closes an open <p>), False for inline formatting (joins the AFE)
+_LANE_START = {**dict.fromkeys(_INLINE_FORMATTING, False),
+               **dict.fromkeys(BLOCK_START, True)}
 MARKER = object()  # active-formatting-elements marker sentinel
 
 CHARS, NULLS, START, END, COMMENT, DOCTYPE, EOF = (
@@ -106,20 +110,27 @@ class _AFEEntry:
         self.attrs = attrs
 
 
+_list_append = list.append
+_list_pop = list.pop
+
+
 class ElementStack(list):
     """Stack of open elements + an exact per-tag-name count of the
     HTML-namespace elements currently on it, maintained across every
     mutation the tree builder performs (append/pop/insert/remove/
-    del-slice/index-assign).
+    del-slice/index-assign), and each element's ``on_stack`` count.
 
-    The count powers an O(1) "definitely not on the stack" fast path
-    in the scope checks. Without it every ``has X in scope`` walk is
-    O(depth), which makes parsing *quadratic* in nesting depth — an
+    The name count powers an O(1) "definitely not on the stack" fast
+    path in the scope checks. Without it every ``has X in scope`` walk
+    is O(depth), which makes parsing *quadratic* in nesting depth — an
     adversarial 100k-deep crawl document becomes a multi-second
     straggler (9.7 s measured at depth 20k before this class; linear
     after). Browsers bound the same cost with a hard DOM-depth cap;
     keeping the walk but short-circuiting it preserves exact WHATWG
-    semantics at any depth."""
+    semantics at any depth. ``on_stack`` does the same for element
+    membership (``el in stack``): active-formatting reconstruction
+    asks it on every text token, and a scan from the stack's bottom
+    made ``"<b><div>x" * n`` quadratic (147 s at 576 KB)."""
 
     __slots__ = ("counts",)
 
@@ -130,11 +141,13 @@ class ElementStack(list):
             self._inc(el)
 
     def _inc(self, el):
+        el.on_stack += 1
         if el.namespace == HTML_NS:
             c = self.counts
             c[el.name] = c.get(el.name, 0) + 1
 
     def _dec(self, el):
+        el.on_stack -= 1
         if el.namespace == HTML_NS:
             c = self.counts
             n = c[el.name] - 1
@@ -146,6 +159,7 @@ class ElementStack(list):
     def append(self, el, _append=list.append):
         # hot path (once per inserted element): counting inlined
         _append(self, el)
+        el.on_stack += 1
         if el.namespace == HTML_NS:
             c = self.counts
             n = el.name
@@ -153,6 +167,7 @@ class ElementStack(list):
 
     def pop(self, i=-1, _pop=list.pop):
         el = _pop(self, i)
+        el.on_stack -= 1
         if el.namespace == HTML_NS:
             c = self.counts
             k = el.name
@@ -236,9 +251,100 @@ class TreeBuilder:
             self._setup_fragment()
         n = 0
         process = self.process  # bind once: ~145k lookups per MB saved
+        in_body_start = self._in_body_start
+        in_body_end = self._in_body_end
+        stack = self.stack
+        counts = stack.counts
+        afe = self.afe
+        no_context = self.fragment_context is None
         # enumerate keeps the token count in C instead of a per-token
         # `n += 1` bytecode pair
         for n, token in enumerate(self.tokenizer.tokenize(), 1):
+            # in-body fast lane: the dominant token shapes of a page
+            # body, handled here instead of through process →
+            # mode_in_body → _in_body_start → insert_start_tag →
+            # insert_element → create_element. It applies exactly where
+            # process would pick mode_in_body's HTML rules with no LF
+            # skip pending, no foster parenting and no template
+            # contents as the insertion target; each branch does what
+            # that path does for its token. Every other token goes
+            # through process, the one general path.
+            if (self.mode == IN_BODY and stack and not self.ignore_lf
+                    and not self.foster):
+                cur = stack[-1]
+                if (cur.namespace == HTML_NS and cur.name != "template"
+                        and (no_context or len(stack) > 1)):
+                    kind = token[0]
+                    if kind == CHARS:
+                        data = token[1]
+                        if "\x00" not in data:
+                            if afe:
+                                self.reconstruct_afe()
+                                cur = stack[-1]
+                            children = cur.children
+                            if children and type(children[-1]) is Text:
+                                children[-1].data += data
+                            else:
+                                t = Text(data)
+                                t.parent = cur
+                                children.append(t)
+                            if (self.frameset_ok
+                                    and _NONWS_RE.search(data) is not None):
+                                self.frameset_ok = False
+                            continue
+                    elif kind == START:
+                        name = token[1]
+                        block = _LANE_START.get(name)
+                        if token[3]:
+                            pass  # self-closing: process acknowledges it
+                        elif block is not None:
+                            if block:
+                                if ("p" in counts
+                                        and self._in_scope("p", SCOPE_BUTTON)):
+                                    self.close_p()
+                                    cur = stack[-1]
+                                    if (cur.name == "template"
+                                            and cur.namespace == HTML_NS
+                                            and cur.content is not None):
+                                        cur = cur.content
+                            elif afe:
+                                self.reconstruct_afe()
+                                cur = stack[-1]
+                            attrs = token[2]
+                            el = Element(name, HTML_NS, attrs)
+                            el.parent = cur
+                            cur.children.append(el)
+                            _list_append(stack, el)
+                            el.on_stack = 1
+                            counts[name] = counts.get(name, 0) + 1
+                            self.n_elements += 1
+                            if not block:
+                                self.push_afe(el, name, attrs)
+                            continue
+                        else:
+                            token = in_body_start(token)
+                            if token is None:
+                                continue
+                    elif kind == END:
+                        name = token[1]
+                        if name == cur.name and (
+                                name == "p" or (
+                                    name in FORMATTING and afe
+                                    and afe[-1] is not MARKER
+                                    and afe[-1].element is cur)):
+                            _list_pop(stack)
+                            cur.on_stack -= 1
+                            k = counts[name] - 1
+                            if k:
+                                counts[name] = k
+                            else:
+                                del counts[name]
+                            if name != "p":
+                                afe.pop()
+                            continue
+                        token = in_body_end(token)
+                        if token is None:
+                            continue
             process(token)
             if self.done:
                 break
@@ -607,7 +713,7 @@ class TreeBuilder:
         if not self.afe:
             return
         entry = self.afe[-1]
-        if entry is MARKER or entry.element in self.stack:
+        if entry is MARKER or entry.element.on_stack:
             return
         i = len(self.afe) - 1
         while True:
@@ -616,7 +722,7 @@ class TreeBuilder:
                 break
             i -= 1
             entry = self.afe[i]
-            if entry is MARKER or entry.element in self.stack:
+            if entry is MARKER or entry.element.on_stack:
                 break
         while True:
             i += 1
@@ -660,7 +766,7 @@ class TreeBuilder:
                 self.stack.pop()
                 del self.afe[fmt_i]
                 return
-            if fmt not in self.stack:
+            if not fmt.on_stack:
                 self.error("adoption-agency-1.2")
                 del self.afe[fmt_i]
                 return
@@ -1125,7 +1231,7 @@ class TreeBuilder:
                 self.error("unexpected-start-tag-out-of-head")
                 self.stack.append(self.head)
                 result = self.mode_in_head(token)
-                if self.head in self.stack:
+                if self.head.on_stack:
                     self.stack.remove(self.head)
                 return result
             if name == "head":
@@ -1155,27 +1261,7 @@ class TreeBuilder:
                 if not data:
                     return None
             self.reconstruct_afe()
-            # inlined insert_text fast path (the hottest call site —
-            # one text token per ~85 input bytes; keep in lockstep
-            # with insert_text below, which remains the one general
-            # implementation every other site uses)
-            stack = self.stack
-            if not self.foster and stack:
-                parent = stack[-1]
-                if (parent.name == "template"
-                        and parent.namespace == HTML_NS
-                        and parent.content is not None):
-                    parent = parent.content
-                children = parent.children
-                prev = children[-1] if children else None
-                if type(prev) is Text:
-                    prev.data += data
-                else:
-                    t = Text(data)
-                    t.parent = parent
-                    children.append(t)
-            else:
-                self.insert_text(data)
+            self.insert_text(data)
             if self.frameset_ok and _NONWS_RE.search(data) is not None:
                 self.frameset_ok = False
             return None
@@ -1336,7 +1422,7 @@ class TreeBuilder:
                     idx = self.afe_index_of(element)
                     if idx != -1:
                         del self.afe[idx]
-                    if element in self.stack:
+                    if element.on_stack:
                         self.stack.remove(element)
                     break
             self.reconstruct_afe()

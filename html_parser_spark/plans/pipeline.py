@@ -129,7 +129,7 @@ def _committed(spark: SparkSession, output_path: str) -> DataFrame:
 
 def incremental_extract(old: DataFrame, new: DataFrame,
                         old_extracted: DataFrame,
-                        giant_partitions: int = 64) -> DataFrame:
+                        giant_partitions: int | None = None) -> DataFrame:
     """Re-crawl incremental extraction — parse only what changed.
 
     Given the previous crawl snapshot ``old``, the fresh snapshot
@@ -144,7 +144,9 @@ def incremental_extract(old: DataFrame, new: DataFrame,
       page bytes; the tiny (url, status) result is materialized once
       via eager localCheckpoint because three consumers branch off
       it);
-    - changed/new pages go through the production skew-isolated parse;
+    - changed/new pages go through the production skew-isolated parse,
+      its giants in one wave (``giant_partitions`` defaults to
+      ``defaultParallelism``, as in ``run_extraction``);
     - unchanged urls carry their committed text forward with one
       url equi-join (digest equality guarantees byte-identical html,
       and the extractor is a pure function of the bytes). An
@@ -179,7 +181,9 @@ def incremental_extract(old: DataFrame, new: DataFrame,
             .select("url")
             .unionByName(missing))
     to_parse = new.select("url", "html").join(work, "url")
-    parsed = extract_pages(skew_isolate(to_parse, giant_partitions),
+    parts = (giant_partitions
+             or new.sparkSession.sparkContext.defaultParallelism)
+    parsed = extract_pages(skew_isolate(to_parse, parts),
                            with_spans=False).select("url", "text")
     carried = old_extracted.select("url", "text").join(keep, "url")
     return parsed.unionByName(carried)

@@ -10,6 +10,7 @@ import random
 from hypothesis import given, settings, strategies as st
 
 from html_parser_spark.engine import parse
+from html_parser_spark.engine import tokenizer as tz
 from html_parser_spark.engine.extractor import extract_body_text, extract_text
 from html_parser_spark.engine.serializer import serialize
 
@@ -156,33 +157,83 @@ def test_fuzz_main_text_is_subsequence_of_body_text():
         assert all(ch in it for ch in main), "main not a subsequence"
 
 
+class _CheckedTokenizer(tz.Tokenizer):
+    """Runs ``check`` before yielding each token, so a check sees the
+    tree builder's state after the previous token."""
+
+    __slots__ = ("check",)
+
+    def tokenize(self):
+        for token in super().tokenize():
+            self.check()
+            yield token
+
+
+def _assert_stack_bookkeeping(tb) -> None:
+    """The ElementStack's per-tag tally and every element's ``on_stack``
+    count equal a direct recount of the stack."""
+    from html_parser_spark.engine.dom import HTML_NS, Element
+
+    recount: dict = {}
+    times: dict = {}
+    for el in tb.stack:
+        if el.namespace == HTML_NS:
+            recount[el.name] = recount.get(el.name, 0) + 1
+        times[id(el)] = times.get(id(el), 0) + 1
+    assert recount == tb.stack.counts
+    # every element the builder can still reach: the stack, the active
+    # formatting list and the tree (template contents included)
+    seen = [el for el in tb.stack]
+    seen += [e.element for e in tb.afe if hasattr(e, "element")]
+    todo = [tb.doc]
+    while todo:
+        node = todo.pop()
+        if isinstance(node, Element):
+            seen.append(node)
+            if node.content is not None:
+                todo.append(node.content)
+        todo.extend(getattr(node, "children", ()))
+    for el in seen:
+        assert el.on_stack == times.get(id(el), 0), el.name
+
+
 def test_fuzz_element_stack_counts_invariant():
-    """The counting ElementStack's per-tag tally must equal a direct
-    recount after arbitrary parses (every mutation path the tree
-    builder uses keeps it exact). Uses fragment parses too, which
-    exercise insert/setitem paths."""
-    from html_parser_spark.engine import tokenizer as tz
-    from html_parser_spark.engine.dom import HTML_NS
+    """The counting ElementStack's per-tag tally and the elements'
+    ``on_stack`` counts must equal a direct recount after every token
+    (every mutation path the tree builder uses keeps them exact), both
+    through ``process()`` and through ``run()``, whose in-body fast lane
+    pushes and pops the stack itself. The ``run()`` half also uses
+    fragment parses, which exercise the insert/setitem paths, and
+    checks the end state: every element off the stack."""
+    from html_parser_spark.engine.dom import HTML_NS, MATHML_NS, SVG_NS, Element
     from html_parser_spark.engine.treebuilder import TreeBuilder
 
+    contexts = [None, None, None, ("div", HTML_NS), ("template", HTML_NS),
+                ("table", HTML_NS), ("foreignObject", SVG_NS),
+                ("mi", MATHML_NS)]
     rng = random.Random(31337)
-    for _ in range(300):
+    for i in range(300):
         data = b"".join(rng.choice(_SNIPPETS)
                         for _ in range(rng.randint(1, 20)))
-        t = tz.Tokenizer(data.decode("utf-8", "replace"))
+        text = data.decode("utf-8", "replace")
+        t = tz.Tokenizer(text)
         tb = TreeBuilder(t)
         # drive the token loop by hand so the invariant is checked
         # after EVERY token (run() ends with a cleared stack, which
         # would make an end-state check vacuous)
         for token in t.tokenize():
             tb.process(token)
-            recount: dict = {}
-            for el in tb.stack:
-                if el.namespace == HTML_NS:
-                    recount[el.name] = recount.get(el.name, 0) + 1
-            assert recount == tb.stack.counts
+            _assert_stack_bookkeeping(tb)
             if tb.done:
                 break
+
+        ctx = contexts[i % len(contexts)]
+        t = _CheckedTokenizer(text)
+        tb = TreeBuilder(t, fragment_context=None if ctx is None
+                         else Element(ctx[0], ctx[1]))
+        t.check = lambda tb=tb: _assert_stack_bookkeeping(tb)
+        tb.run()
+        _assert_stack_bookkeeping(tb)
 
 
 def test_fragment_context_fuzz_never_crashes():

@@ -5,6 +5,7 @@ whole module runs in well under a minute of compute."""
 
 from __future__ import annotations
 
+import re
 import shutil
 import tempfile
 
@@ -1303,6 +1304,13 @@ def test_incremental_extract_parses_only_changes(spark):
     assert got["u5"] == direct["u5"]
     assert "u3" not in got              # gone
     assert len(got) == 4
+    # by default the giants spread over one wave, as in run_extraction
+    default = incremental_extract(old, new, committed)
+    assert {r["url"]: r["text"] for r in default.collect()} == got
+    plan = default._jdf.queryExecution().executedPlan().toString()
+    parts = {int(n) for n in re.findall(
+        r"hashpartitioning\(xxhash64\(url#\d+, 42\), (\d+)\)", plan)}
+    assert parts == {spark.sparkContext.defaultParallelism}, plan
 
 
 def test_tfidf_keywords_ranking(spark):

@@ -1,29 +1,30 @@
 """Single-core engine throughput probe + cProfile breakdown.
 
-Builds the 400-doc adversarial profile sample (every doc_id 0..399
-through sources.pages.build_page — the same html the corpus bench
-parses), then measures parse+extract wall on ONE core, interleaved
-A/B-able, and optionally prints the cProfile top sites.
+Samples the benchmark corpus (``perfbench.corpus.generate(seed)``, the
+pages the ``kernel_inproc`` workload parses), then measures
+parse+extract wall on ONE core, interleaved A/B-able, and optionally
+prints the cProfile top sites.
 
-Usage: python tools/profile_engine.py [n_docs] [reps] [--profile]
+Usage: python tools/profile_engine.py [n_docs] [reps] [seed] [--profile]
+
+``n_docs`` 0 (the default) takes the whole corpus (5,000 pages,
+~58 MB); otherwise a seeded sample of that many pages.
 """
 from __future__ import annotations
 
+import random
 import sys
 import time
 
 sys.path.insert(0, ".")
 
-import duckdb  # noqa: E402
 
-
-def sample(n_docs: int):
-    from html_parser_spark.sources.pages import build_page
-    rows = duckdb.sql(
-        f"SELECT doc_id, text, lang, source FROM "
-        f"'/root/testdata/sf0.1/documents.parquet' ORDER BY doc_id "
-        f"LIMIT {n_docs}").fetchall()
-    pages = [build_page(d, t, lg, s)[2] for d, t, lg, s in rows]
+def sample(n_docs: int = 0, seed: int = 7) -> list[bytes]:
+    from perfbench.corpus import generate
+    pages = generate(seed).html
+    if 0 < n_docs < len(pages):
+        pick = sorted(random.Random(seed).sample(range(len(pages)), n_docs))
+        pages = [pages[i] for i in pick]
     return pages
 
 
@@ -39,15 +40,16 @@ def one_pass(pages) -> float:
 
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    n_docs = int(args[0]) if args else 400
+    n_docs = int(args[0]) if args else 0
     reps = int(args[1]) if len(args) > 1 else 3
-    pages = sample(n_docs)
+    seed = int(args[2]) if len(args) > 2 else 7
+    pages = sample(n_docs, seed)
     mb = sum(len(p) for p in pages) / 1e6
     one_pass(pages[:40])  # warm imports/regex caches
     walls = [one_pass(pages) for _ in range(reps)]
     best = min(walls)
     mid = sorted(walls)[len(walls) // 2]
-    print(f"docs={n_docs} mb={mb:.2f} best={best:.3f}s "
+    print(f"docs={len(pages)} seed={seed} mb={mb:.2f} best={best:.3f}s "
           f"({mb/best:.2f} MB/s) mid={mid:.3f}s ({mb/mid:.2f} MB/s) "
           f"walls={[round(w,3) for w in walls]}")
     if "--profile" in sys.argv:
