@@ -1186,16 +1186,16 @@ def _q_snapshot_diff(spark, sf_dir):
 
 def _q_incremental_recrawl(spark, sf_dir):
     """The north-rule resumability story composed end-to-end: diff
-    the two snapshots by content digest, run the production
-    skew-isolated parse kernel ONLY over changed∪new urls, carry the
-    committed extraction forward for unchanged urls (digest equality
-    ⇒ byte-identical html ⇒ identical extraction — the extractor is a
-    pure function of the bytes), drop gone urls. The committed side
-    is the corpus's golden WET text column; the changed-doc mutation
-    is a trailing comment, so the re-parsed text must STILL match the
-    closed-form oracle byte-for-byte — pinning that the incremental
-    path and the full parse agree. Oracle: expected text for exactly
-    the live urls of snapshot B."""
+    the two snapshots by content digest, run the parse kernel ONLY
+    over changed∪new urls, carry the committed extraction forward for
+    unchanged urls (digest equality ⇒ byte-identical html ⇒ identical
+    extraction — the extractor is a pure function of the bytes), drop
+    gone urls. The committed side is the corpus's golden WET text
+    column; the changed-doc mutation is a trailing comment, so the
+    re-parsed text must STILL match the closed-form oracle
+    byte-for-byte — pinning that the incremental path and the full
+    parse agree. Oracle: expected text for exactly the live urls of
+    snapshot B."""
     from html_parser_spark.plans.pipeline import incremental_extract
     pages = pages_df(spark, sf_dir)
     old = pages.select("url", "html")
@@ -1401,11 +1401,6 @@ def _q_curation_lm(spark, sf_dir):
     bits DIV total words ×100 — exact integers, so the keep flag is
     bit-identical on both engines. Oracle recomputes the whole chain
     from the closed-form expected text."""
-    from html_parser_spark.plans.pipeline import skew_isolate
-    # the production skew plan before the kernel: documents.parquet is
-    # one file per sf, so without the repartition the synthesis+parse
-    # chain runs on a single scan split (measured 30 s vs ~7 s sf0.1)
-    parts = spark.sparkContext.defaultParallelism * 2
     # TWO eager localCheckpoints, each killing a distinct re-execution:
     # inside surprisal_stats the word stream descends into BOTH the
     # vocab-count side and the probe side of the word⋈vocab join
@@ -1414,8 +1409,7 @@ def _q_curation_lm(spark, sf_dir):
     # and the score table feeds both the corpus-mean reduction and the
     # final select — the join would run twice without checkpointing
     # `s`. Both GC-released, unlike persists.
-    extracted = (extract_pages(skew_isolate(pages_df(spark, sf_dir),
-                                            parts), with_spans=False)
+    extracted = (extract_pages(pages_df(spark, sf_dir), with_spans=False)
                  .select("url", "text")
                  .localCheckpoint(eager=True))
     s = (textstats.surprisal_stats(extracted, key_col="url")

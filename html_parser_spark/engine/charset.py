@@ -200,7 +200,6 @@ def from_meta_content(content: str) -> str | None:
 # Byte prescan ("prescan a byte stream to determine its encoding")
 # ---------------------------------------------------------------------------
 
-_B_WS = b"\t\n\x0c\r "
 _B_WS_SLASH = b"\t\n\x0c\r /"
 _B_TAGEND_RE = re.compile(rb"[\t\n\x0c\r >]")
 

@@ -73,9 +73,6 @@ area base basefont bgsound br col embed frame hr img input keygen link meta
 param source track wbr
 """.split())
 
-RAWTEXT_ELEMENTS = frozenset(
-    ["style", "script", "xmp", "iframe", "noembed", "noframes", "plaintext"])
-
 # ---------------------------------------------------------------------------
 # quirks-mode DOCTYPE tables (WHATWG HTML §13.2.6.4.1), lowercase
 # ---------------------------------------------------------------------------

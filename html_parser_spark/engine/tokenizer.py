@@ -53,7 +53,6 @@ _WS = "\t\n\f "
 _RCDATA_RUN = re.compile(r"[^&<\x00]+")
 _RAWTEXT_RUN = re.compile(r"[^<\x00]+")
 _ESCAPED_RUN = re.compile(r"[^<\x00-]+")
-_PLAINTEXT_RUN = re.compile(r"[^\x00]+")
 _TAGNAME_RUN = re.compile(r"[^\t\n\f />]+")
 # data-state fused fast path: one C-level match consumes a clean text
 # run AND, when one follows immediately, a complete bare `<name>` /

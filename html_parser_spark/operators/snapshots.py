@@ -30,8 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-STATUSES = ("unchanged", "changed", "new", "gone")
-
 
 def snapshot_diff(old: DataFrame, new: DataFrame, key: str = "url",
                   content_col: str = "html") -> DataFrame:

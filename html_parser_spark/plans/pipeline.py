@@ -13,10 +13,12 @@ columns — is identical; swap ``format("parquet")`` for
 
 Why each piece exists at 10^12-document scale:
 
-- ``skew_isolate``: html sizes are Zipf-ish, and AQE skew handling
-  only rebalances *joins/aggs*, not ``mapInPandas``; so only the
-  multi-MB giant documents shuffle, into their own fine partitions,
-  while the rest stay on their byte-bounded scan splits.
+- ``skew_isolate``, ``run_extraction``'s plan and the only skew plan
+  (sources arrive well partitioned, and ``incremental_extract`` parses
+  on its url join's partitions): html sizes are Zipf-ish, and
+  AQE skew handling only rebalances *joins/aggs*, not ``mapInPandas``;
+  so only the multi-MB giant documents shuffle, into their own fine
+  partitions, while the rest stay on their byte-bounded scan splits.
 - ``resume_filter``: a left **anti join** of the source against the
   already-committed output keys. On Iceberg this reads only the
   ``url`` column of committed snapshots (column pruning), and Spark
@@ -40,19 +42,16 @@ from ..operators.extract import extract_pages
 BIG_DOC_BYTES = 1 << 20  # 1 MiB: the giant-document size boundary
 
 
-def configure(builder_or_spark=None, cpus: int | None = None,
-              shuffle_partitions: int | None = None,
-              arrow_batch: int = 64):
+def configure(builder_or_spark=None, cpus: int | None = None):
     """Build (or tune) a SparkSession for the extraction workload.
 
-    - Arrow batches capped at ``arrow_batch`` docs and 4 MiB (cells are
-      MB-scale: a one-wave giant partition would batch a dozen giants).
+    - Arrow batches capped at 64 docs and 4 MiB (cells are MB-scale: a
+      one-wave giant partition would batch a dozen giants).
     - AQE on: runtime coalescing of the post-shuffle partitions.
-    - ``files.maxPartitionBytes`` left at default for parquet; on Iceberg
-      use the table's split size.
+    - ``files.maxPartitionBytes`` at 16 MB (see below); on Iceberg use
+      the table's split size.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(2 * cpus, 8)
     b = builder_or_spark or SparkSession.builder
     if isinstance(b, SparkSession):
         return b
@@ -60,11 +59,10 @@ def configure(builder_or_spark=None, cpus: int | None = None,
             .appName("html-parser-spark")
             # deterministic timestamp semantics for the window oracles
             .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+            .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 8)))
             .config("spark.sql.adaptive.enabled", "true")
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                    str(arrow_batch))
+            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
             .config("spark.sql.execution.arrow.maxBytesPerBatch",
                     str(4 << 20))
             # html cells are KB-MB and the per-byte python parse cost is
@@ -128,8 +126,7 @@ def _committed(spark: SparkSession, output_path: str) -> DataFrame:
 
 
 def incremental_extract(old: DataFrame, new: DataFrame,
-                        old_extracted: DataFrame,
-                        giant_partitions: int | None = None) -> DataFrame:
+                        old_extracted: DataFrame) -> DataFrame:
     """Re-crawl incremental extraction — parse only what changed.
 
     Given the previous crawl snapshot ``old``, the fresh snapshot
@@ -144,9 +141,10 @@ def incremental_extract(old: DataFrame, new: DataFrame,
       page bytes; the tiny (url, status) result is materialized once
       via eager localCheckpoint because three consumers branch off
       it);
-    - changed/new pages go through the production skew-isolated parse,
-      its giants in one wave (``giant_partitions`` defaults to
-      ``defaultParallelism``, as in ``run_extraction``);
+    - changed/new pages go through the parse kernel on the partitions
+      the url join gives them (a shuffle join hashes them on url, a
+      broadcast join keeps the streamed side's partitions); no second
+      skew plan is stacked on top;
     - unchanged urls carry their committed text forward with one
       url equi-join (digest equality guarantees byte-identical html,
       and the extractor is a pure function of the bytes). An
@@ -181,10 +179,7 @@ def incremental_extract(old: DataFrame, new: DataFrame,
             .select("url")
             .unionByName(missing))
     to_parse = new.select("url", "html").join(work, "url")
-    parts = (giant_partitions
-             or new.sparkSession.sparkContext.defaultParallelism)
-    parsed = extract_pages(skew_isolate(to_parse, parts),
-                           with_spans=False).select("url", "text")
+    parsed = extract_pages(to_parse, with_spans=False).select("url", "text")
     carried = old_extracted.select("url", "text").join(keep, "url")
     return parsed.unionByName(carried)
 

@@ -26,11 +26,17 @@ reference covers (/root/reference/lib/Parser.php:49-142):
   textContent order is invariant under adoption, so the golden text is
   unaffected;
 - skew: every 997th doc repeats its body 8000× (~MB-scale giants),
-  every 97th 2000×, every 13th 8× (see ``rep_factor``), so the salting
-  path in the job plan has something to do.
+  every 97th 2000×, every 13th 8× (see ``rep_factor``) — the
+  Zipf-ish size tail of a real crawl, giving ``run_extraction``'s
+  giant-document plan real giants to place.
 
 Generation runs **distributed** (a pandas batch kernel under
-``mapInPandas``), never on the driver.
+``mapInPandas``), never on the driver. ``documents.parquet`` is one
+file per scale factor, so ``pages_df`` hash-partitions the small
+documents frame by ``doc_id`` before the synthesis — one partition per
+core, each of at least ``DOCS_PER_PARTITION`` documents: text
+shuffles, html never does, and every downstream parse starts from
+parallel input.
 """
 
 from __future__ import annotations
@@ -252,18 +258,35 @@ def _synthesize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
                                           "text", "lang"])
 
 
+# Floor on documents per source partition. A Python task costs ~0.1-
+# 0.25 s before it sees a row and a page ~2 ms to synthesize and parse,
+# so a smaller partition spends more on the task than on its pages
+# (4-core host, sf0.01's 500 documents: one partition ran extract_text
+# and incremental_recrawl faster than eight at local[8]).
+DOCS_PER_PARTITION = 500
+
+
 def pages_df(spark, sf_dir: str, copies: int = 1):
-    """documents.parquet -> pages DataFrame (distributed synthesis).
+    """documents.parquet -> pages DataFrame (distributed synthesis),
+    hashed on ``doc_id`` into ``defaultParallelism`` partitions, fewer
+    when the table has under ``DOCS_PER_PARTITION`` documents a core.
 
     ``copies > 1`` replicates every document under distinct urls (path
     suffix ``/c{i}``) with identical html — a deterministic corpus
     scale-up used by the bench and by dedup demos. The replication is a
     Catalyst ``explode`` (JVM-side), so only the parse pays per-copy.
     """
+    import pyarrow.dataset as ds
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .select("doc_id", "text", "lang", "source")
+    path = f"{sf_dir}/documents.parquet"
+    n_docs = ds.dataset(path).count_rows()  # footers only, no Spark job
+    parts = min(spark.sparkContext.defaultParallelism,
+                max(1, -(-n_docs // DOCS_PER_PARTITION)))
+    docs = spark.read.parquet(path).select("doc_id", "text", "lang",
+                                           "source")
+    if parts > 1:  # else keep the scan split: no shuffle for one task
+        docs = docs.repartition(parts, "doc_id")
     pages = docs.mapInPandas(_synthesize_batches, schema=PAGES_SCHEMA)
     if copies > 1:
         pages = (pages

@@ -68,20 +68,6 @@ def stream_extract(spark: SparkSession, source_dir: str, output_dir: str,
                                available_now)
 
 
-def stream_extract_dedup(spark: SparkSession, source_dir: str,
-                         output_dir: str, checkpoint_dir: str,
-                         watermark_delay: str = "1 hour",
-                         available_now: bool = True,
-                         with_spans: bool = False):
-    """Thin alias: ``stream_extract`` with the dedup stage enabled —
-    one reader/writer construction, no drift between the two entry
-    points."""
-    return stream_extract(spark, source_dir, output_dir, checkpoint_dir,
-                          available_now=available_now,
-                          with_spans=with_spans,
-                          dedup_watermark=watermark_delay)
-
-
 def stream_recrawl(spark: SparkSession, source_dir: str,
                    old_snapshot_dir: str, output_dir: str,
                    checkpoint_dir: str, available_now: bool = True,

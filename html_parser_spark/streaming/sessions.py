@@ -27,6 +27,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .ingest import _start_parquet_sink
+
 SESSION_SCHEMA = ("source string, session_id long, n_docs long, "
                   "start_ts long, end_ts long")
 _STATE_SCHEMA = "start long, end long, n long, sid long"
@@ -147,11 +149,5 @@ def stream_sessions(spark, source_dir: str, output_dir: str,
            .applyInPandasWithState(
                _session_fn(gap_s, close_stale_after_s),
                SESSION_SCHEMA, _STATE_SCHEMA, "append", timeout))
-    writer = (out.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(out, output_dir, checkpoint_dir,
+                               available_now)

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .ingest import _start_parquet_sink
+
 
 def crawl_window_counts(pages: DataFrame, window: str = "6 hours",
                         watermark: str | None = "1 hour") -> DataFrame:
@@ -45,11 +47,5 @@ def stream_window_counts(spark, source_dir: str, output_dir: str,
     past the watermark). Returns the StreamingQuery."""
     src = (spark.readStream.schema(schema).parquet(source_dir))
     agg = crawl_window_counts(src, window, watermark)
-    writer = (agg.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(agg, output_dir, checkpoint_dir,
+                               available_now)

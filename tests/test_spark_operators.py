@@ -5,7 +5,6 @@ whole module runs in well under a minute of compute."""
 
 from __future__ import annotations
 
-import re
 import shutil
 import tempfile
 
@@ -21,7 +20,7 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def spark():
     from html_parser_spark.plans.pipeline import configure
-    s = (configure(cpus=4, arrow_batch=64))
+    s = configure(cpus=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
@@ -142,6 +141,29 @@ def test_lineage_counters(spark, pages):
     per_part = out.groupBy("part_id").count().collect()
     assert len(per_part) > 1  # lineage ids actually vary by partition
     assert all(r["part_id"] >= 0 for r in per_part)
+
+
+@pytest.mark.parametrize("sf, one_part", [("sf0.1", False),
+                                          ("sf0.01", True)])
+def test_pages_df_is_partitioned_at_the_source(spark, sf, one_part):
+    """documents.parquet is one file, so pages_df hash-partitions the
+    documents frame by doc_id BELOW the synthesis — the plan's only
+    Exchange carries text, never html — one partition per core, each
+    of at least DOCS_PER_PARTITION documents: sf0.1's 5,000 fill every
+    core, sf0.01's 500 keep their one scan split with no Exchange."""
+    from html_parser_spark.sources.pages import pages_df
+    pages = pages_df(spark, f"/root/testdata/{sf}")
+    plan = pages._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan, plan
+    if one_part:
+        assert "Exchange" not in plan, plan
+    else:
+        assert plan.count("Exchange") == 1, plan
+        below = plan[plan.index("Exchange"):]
+        assert below.startswith("Exchange hashpartitioning(doc_id#"), plan
+        assert "MapInPandas" not in below and "html" not in below, plan
+    assert pages.rdd.getNumPartitions() == (
+        1 if one_part else spark.sparkContext.defaultParallelism)
 
 
 def test_minhash_band_pairs_catch_exact_dups(spark):
@@ -1291,8 +1313,7 @@ def test_incremental_extract_parses_only_changes(spark):
         [("u1", "SENTINEL-u1"), ("u2", "SENTINEL-u2"),
          ("u3", "SENTINEL-u3")], ["url", "text"])
     got = {r["url"]: r["text"]
-           for r in incremental_extract(old, new, committed,
-                                        giant_partitions=2).collect()}
+           for r in incremental_extract(old, new, committed).collect()}
     direct = {r["url"]: r["text"]
               for r in extract_pages(new, with_spans=False)
               .select("url", "text").collect()}
@@ -1304,13 +1325,10 @@ def test_incremental_extract_parses_only_changes(spark):
     assert got["u5"] == direct["u5"]
     assert "u3" not in got              # gone
     assert len(got) == 4
-    # by default the giants spread over one wave, as in run_extraction
-    default = incremental_extract(old, new, committed)
-    assert {r["url"]: r["text"] for r in default.collect()} == got
-    plan = default._jdf.queryExecution().executedPlan().toString()
-    parts = {int(n) for n in re.findall(
-        r"hashpartitioning\(xxhash64\(url#\d+, 42\), (\d+)\)", plan)}
-    assert parts == {spark.sparkContext.defaultParallelism}, plan
+    # the parse runs on the url join's partitions: no skew plan on top
+    plan = (incremental_extract(old, new, committed)
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "xxhash64" not in plan, plan
 
 
 def test_tfidf_keywords_ranking(spark):
@@ -2171,14 +2189,16 @@ def test_crawl_schedule_payload_columns_survive(spark):
 
 
 def test_extract_tables_zero_shuffle(spark, pages):
-    """The table-mining kernel is a pure map: zero Exchange in the
-    plan (fan-out happens inside mapInPandas, never via explode of a
-    materialized array)."""
+    """The table-mining kernel is a pure map: it adds no Exchange to
+    its input's plan (fan-out happens inside mapInPandas, never via
+    explode of a materialized array)."""
     from html_parser_spark.operators.extract import extract_html_tables
 
-    plan = (extract_html_tables(pages)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan, plan
+    def exchanges(df):
+        return df._jdf.queryExecution().executedPlan().toString() \
+            .count("Exchange")
+
+    assert exchanges(extract_html_tables(pages)) == exchanges(pages)
 
 
 def test_curation_lm_pipeline_band_is_live(spark):

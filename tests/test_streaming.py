@@ -331,12 +331,12 @@ def test_stream_recrawl_parses_only_changes(spark):
 
 
 def test_stream_extract_dedup_suppresses_in_window_duplicates(spark):
-    """stream_extract_dedup: exact duplicates (same html bytes under a
+    """stream_extract(dedup_watermark=...): exact duplicates (same html bytes under a
     different url) arriving within the watermark window are parsed and
     emitted once; distinct payloads all survive; the dedup state key
     is content, not url."""
     from html_parser_spark.sources.pages import pages_df
-    from html_parser_spark.streaming.ingest import stream_extract_dedup
+    from html_parser_spark.streaming import stream_extract
 
     tmp = tempfile.mkdtemp(prefix="hps_sdedup_")
     try:
@@ -350,8 +350,8 @@ def test_stream_extract_dedup_suppresses_in_window_duplicates(spark):
         both = pages.unionByName(mirrored)
         both.repartition(4).write.parquet(f"{tmp}/src")
 
-        q = stream_extract_dedup(spark, f"{tmp}/src", f"{tmp}/out",
-                                 f"{tmp}/ckpt")
+        q = stream_extract(spark, f"{tmp}/src", f"{tmp}/out",
+                           f"{tmp}/ckpt", dedup_watermark="1 hour")
         q.awaitTermination(120)
         out = spark.read.parquet(f"{tmp}/out")
         assert out.count() == n_uniq  # every duplicate suppressed
