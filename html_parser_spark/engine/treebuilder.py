@@ -2132,15 +2132,21 @@ class TreeBuilder:
                 return self.mode_in_head(token)
             self.error("unexpected-end-tag")
             return None
-        # EOF
+        # EOF. The spec closes one template, resets the insertion mode
+        # and reprocesses; while a template is still open, every mode
+        # the reset can pick hands EOF straight back here without
+        # touching the tree, so closing them all in one pass builds the
+        # same tree and errors without one reprocess per open template
+        # (which ``process`` caps).
         if self.find_on_stack("template") == -1:
             self.stop_parsing()
             return None
-        self.error("eof-in-template")
-        self.pop_until("template")
-        self.clear_afe_to_marker()
-        if self.template_modes:
-            self.template_modes.pop()
+        while self.find_on_stack("template") != -1:
+            self.error("eof-in-template")
+            self.pop_until("template")
+            self.clear_afe_to_marker()
+            if self.template_modes:
+                self.template_modes.pop()
         self.reset_insertion_mode()
         return token
 

@@ -66,6 +66,8 @@ from __future__ import annotations
 
 import gc
 import re
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
@@ -114,6 +116,33 @@ def _partition_id() -> int:
         return -1
 
 
+def _drop_zip_importers() -> None:
+    """Drop the zipimporters from ``sys.path_importer_cache``.
+
+    pyspark starts every Python task with ``importlib.invalidate_caches()``
+    (``worker_util.setup_spark_files``), and on Python 3.11 each cached
+    zipimporter's ``invalidate_caches()`` re-reads its archive's whole
+    central directory. A reused worker caches 16 of them: Spark's
+    ``pyspark.zip`` and 11 of its package directories, the py4j zip and
+    ``py4j/``, the ``spark-core`` jar and its ``org/``. Measured on a
+    4-core shared host (Spark 4.1.2, Python 3.11.7), this drop cut a
+    trivial row-driver operator's worker CPU per extra task from
+    210-248 ms to 36-42 ms (warm ``local[3]``, 30 versus 3
+    partitions), and ``crawl_mix``'s ``cpu_s_per_mb`` from 0.1515 to
+    0.1246 s/MB (medians of 10 interleaved pairs, 9 of them better).
+
+    Safe because the entries are only a cache and no archive on a
+    worker's ``sys.path`` changes while the worker lives: the
+    installation's zips and jar are fixed, and Spark refuses to
+    overwrite an added path. A later import re-creates its importer
+    from ``zipimport._zip_directory_cache`` without reading the
+    archive again."""
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items()
+                 if isinstance(f, zipimport.zipimporter)]:
+        del cache[path]
+
+
 def _row_kernel(schema: str, per_row, fail: tuple | None = None):
     """The ``mapInPandas`` function every per-row operator runs on: pure
     pandas in and out, so it also runs on local frames without Spark.
@@ -134,7 +163,13 @@ def _row_kernel(schema: str, per_row, fail: tuple | None = None):
     generator freezes the heap that is alive (``gc.freeze()``, only if
     nothing is frozen yet), so those collections scan only the objects
     made since: the batches' DOMs and frames. Closing the generator
-    unfreezes what it froze and re-enables the collector."""
+    unfreezes what it froze and re-enables the collector.
+
+    In a Spark task (a ``TaskContext`` exists), closing the generator
+    also drops the worker's cached zipimporters
+    (:func:`_drop_zip_importers`), so the next task on the reused
+    worker does not re-read their archives; on bare pandas the import
+    machinery is left alone."""
     names = _field_names(schema)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -175,6 +210,8 @@ def _row_kernel(schema: str, per_row, fail: tuple | None = None):
                 gc.unfreeze()
             if gc_was_enabled:
                 gc.enable()
+            if part_id >= 0:
+                _drop_zip_importers()
 
     return run
 

@@ -258,11 +258,12 @@ def _synthesize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
                                           "text", "lang"])
 
 
-# Floor on documents per source partition. A Python task costs ~0.1-
-# 0.25 s before it sees a row and a page ~2 ms to synthesize and parse,
-# so a smaller partition spends more on the task than on its pages
-# (4-core host, sf0.01's 500 documents: one partition ran extract_text
-# and incremental_recrawl faster than eight at local[8]).
+# Floor on documents per source partition. A row-driver task costs
+# ~0.04 s of worker CPU before it sees a row and a page ~2 ms to
+# synthesize and parse. Measured at sf0.01 (500 documents, local[8],
+# 4-core host, 3 alternated contract sweeps), one partition against
+# eight: incremental_recrawl 2.6-2.8 s vs 3.0-3.3 s, extract_text even
+# (0.8-1.1 s), the 73-query sweep total 121-131 s vs 118-119 s.
 DOCS_PER_PARTITION = 500
 
 

@@ -93,6 +93,37 @@ class TestParserAPI:
         assert len(frag.children) == 1
         assert frag.children[0].data == "a<b>c"
 
+    @pytest.mark.parametrize("n", [98, 500, 2000])
+    @pytest.mark.parametrize("unit", [("template",), ("template", "tr")])
+    def test_eof_closes_any_number_of_open_templates(self, unit, n):
+        """EOF in "in template" closes one template per step with a
+        parse error each; past ~100 open templates the reprocess loop
+        used to raise instead. The tree is the spec's: the nesting
+        intact under head, the text in the innermost template's
+        content (after its empty ``tr``), an empty body."""
+        from html_parser_spark.engine.dom import Element, Text
+
+        src = "".join(f"<{name}>" for name in unit) * n + "x"
+        out = parse(src.encode())
+        head, body = out.document.children[-1].children
+        assert (head.name, body.name, body.children) == ("head", "body", [])
+        # walk down iteratively: the nesting is too deep to recurse
+        chain, node = [], head
+        while True:
+            holder = node.content if node.content is not None else node
+            kids = holder.children
+            chain.append((node.name,
+                          [k.data for k in kids if isinstance(k, Text)]))
+            els = [k for k in kids if isinstance(k, Element)]
+            if not els:
+                break
+            assert len(els) == 1
+            node = els[0]
+        want = [("head", [])] + [(name, []) for name in unit] * n
+        want[-len(unit)] = ("template", ["x"])
+        assert chain == want
+        assert out.errors.count("eof-in-template") == n
+
 
 class TestSerializer:
     @pytest.mark.parametrize("html,expected", [

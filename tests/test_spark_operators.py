@@ -135,6 +135,20 @@ def test_resume_reads_only_a_missing_path_as_nothing_committed(
     assert files == ["part-0.parquet"]
 
 
+def test_resume_on_a_missing_path_runs_no_query(spark, pages, tmp_path):
+    """The first run's resume filter asks the filesystem: it adds no
+    SQL execution to the status store (a read of the missing path
+    used to leave a failed one, with its trace in the log)."""
+    from html_parser_spark.plans.pipeline import resume_filter
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    n = store.executionsCount()
+    assert resume_filter(pages, str(tmp_path / "missing")) is pages
+    bus.waitUntilEmpty()
+    assert store.executionsCount() == n
+
+
 def test_lineage_counters(spark, pages):
     from html_parser_spark.operators.extract import extract_pages
     out = extract_pages(pages.repartition(4), with_spans=False)
