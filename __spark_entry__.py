@@ -1331,7 +1331,7 @@ def _q_frontier_robots(spark, sf_dir):
     rules = spark.createDataFrame(list(_ROBOTS_RULES),
                                   ["host", "rule", "prefix"])
     return robots_filter(frontier(extract_links(p), p), rules,
-                         url_col="canon", broadcast_rules=True)
+                         url_col="canon")
 
 
 def _q_warc_ingest(spark, sf_dir):
@@ -1377,11 +1377,11 @@ def _q_crawl_schedule(spark, sf_dir):
     delays = spark.createDataFrame(list(_CRAWL_DELAYS),
                                    ["host", "delay_s"])
     allowed = (robots_filter(frontier(extract_links(p), p), rules,
-                             url_col="canon", broadcast_rules=True)
+                             url_col="canon")
                .where(F.col("allowed"))
                .select("canon", "n_refs"))
     return (crawl_schedule(allowed, delays, url_col="canon",
-                           default_delay_s=1, broadcast_delays=True)
+                           default_delay_s=1)
             .select("canon", "n_refs", "host", "fetch_slot", "eta_s"))
 
 

@@ -450,23 +450,7 @@ def decode(data: bytes, encoding: str) -> str:
     Parity: /root/reference/lib/Parser/Data.php:98-117 (done here as bulk
     string ops rather than char-at-a-time — semantically identical).
     """
-    if encoding == "utf-8" and data.startswith(b"\xef\xbb\xbf"):
-        data = data[3:]
-    elif encoding == "utf-16be" and data.startswith(b"\xfe\xff"):
-        data = data[2:]
-    elif encoding == "utf-16le" and data.startswith(b"\xff\xfe"):
-        data = data[2:]
-    if encoding == "replacement":
-        text = "�" if data else ""
-    elif encoding == "x-user-defined":
-        text = data.decode("ascii", "ignore") if data.isascii() else \
-            "".join(chr(b) if b < 0x80 else chr(0xF780 + b - 0x80) for b in data)
-    else:
-        codec = _PY_CODEC.get(encoding, "cp1252")
-        text = data.decode(codec, "replace")
-    if "\r" in text:
-        text = text.replace("\r\n", "\n").replace("\r", "\n")
-    return text
+    return decode_count(data, encoding)[0]
 
 
 def _counting_replace(ex):
@@ -490,29 +474,30 @@ def decode_count(data: bytes, encoding: str) -> tuple[str, int]:
     Strict decode is the fast path (zero-count, no second pass); on
     failure the count comes from a counting twin of the 'replace'
     handler (exact per error event, character-boundary-safe)."""
-    if encoding in ("replacement", "x-user-defined"):
-        # replacement: the single U+FFFD *is* the error; x-user-defined
+    if encoding == "replacement":
+        # the single U+FFFD *is* the error
+        return ("\ufffd", 1) if data else ("", 0)
+    n_bad = 0
+    if encoding == "x-user-defined":
         # maps every byte somewhere (never malformed)
-        return decode(data, encoding), 1 if (
-            encoding == "replacement" and data) else 0
-    codec = _PY_CODEC.get(encoding, "cp1252")
-    body = data
-    if encoding == "utf-8" and body.startswith(b"\xef\xbb\xbf"):
-        body = body[3:]
-    elif encoding == "utf-16be" and body.startswith(b"\xfe\xff"):
-        body = body[2:]
-    elif encoding == "utf-16le" and body.startswith(b"\xff\xfe"):
-        body = body[2:]
-    try:
-        text = body.decode(codec, "strict")
-        if "\r" in text:
-            text = text.replace("\r\n", "\n").replace("\r", "\n")
-        return text, 0
-    except UnicodeDecodeError:
-        # the counting handler replaces byte-for-byte like 'replace',
-        # so its output IS the decoded text — one decode, not two
-        _DECODE_ERR_TL.n = 0
-        text = body.decode(codec, "hps-counting-replace")
-        if "\r" in text:
-            text = text.replace("\r\n", "\n").replace("\r", "\n")
-        return text, _DECODE_ERR_TL.n
+        text = data.decode("ascii") if data.isascii() else "".join(
+            chr(b) if b < 0x80 else chr(0xF780 + b - 0x80) for b in data)
+    else:
+        codec = _PY_CODEC.get(encoding, "cp1252")
+        if encoding == "utf-8" and data.startswith(b"\xef\xbb\xbf"):
+            data = data[3:]
+        elif encoding == "utf-16be" and data.startswith(b"\xfe\xff"):
+            data = data[2:]
+        elif encoding == "utf-16le" and data.startswith(b"\xff\xfe"):
+            data = data[2:]
+        try:
+            text = data.decode(codec, "strict")
+        except UnicodeDecodeError:
+            # the counting handler replaces byte-for-byte like 'replace',
+            # so its output IS the decoded text — one decode, not two
+            _DECODE_ERR_TL.n = 0
+            text = data.decode(codec, "hps-counting-replace")
+            n_bad = _DECODE_ERR_TL.n
+    if "\r" in text:
+        text = text.replace("\r\n", "\n").replace("\r", "\n")
+    return text, n_bad

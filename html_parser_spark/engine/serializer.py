@@ -57,69 +57,77 @@ def _attr_name(key) -> str:
     return key
 
 
-def _serialize_node(node: Node, out: list[str], scripting: bool) -> None:
-    if isinstance(node, Element):
-        out.append("<")
-        out.append(node.name)
-        for key, value in node.attrs.items():
-            out.append(" ")
-            out.append(_attr_name(key))
-            out.append('="')
-            out.append(_escape_attr(value))
-            out.append('"')
-        out.append(">")
-        if node.namespace == HTML_NS and node.name in VOID_HTML:
-            return
-        if node.content is not None:  # template contents
-            for child in node.content.children:
-                _serialize_node(child, out, scripting)
-        else:
-            raw = node.namespace == HTML_NS and (
-                node.name in _RAWTEXT_PARENTS
-                or (node.name == "noscript" and scripting))
-            for child in node.children:
-                if raw and isinstance(child, Text):
-                    out.append(child.data)
+def _serialize_nodes(nodes, out: list[str], scripting: bool) -> None:
+    """Serialize ``nodes`` and their subtrees, in document order, onto
+    ``out``. An explicit stack of child iterators, not recursion:
+    crawl documents nest deeper than Python's recursion limit (the
+    same walk as ``extractor.extract_text``). A frame is (children,
+    raw-text parent?, end tag to emit when the children run out)."""
+    frames: list[tuple] = [(iter(nodes), False, None)]
+    while frames:
+        it, raw, end = frames[-1]
+        for node in it:
+            if isinstance(node, Element):
+                out.append("<")
+                out.append(node.name)
+                for key, value in node.attrs.items():
+                    out.append(" ")
+                    out.append(_attr_name(key))
+                    out.append('="')
+                    out.append(_escape_attr(value))
+                    out.append('"')
+                out.append(">")
+                if node.namespace == HTML_NS and node.name in VOID_HTML:
+                    continue
+                end_tag = f"</{node.name}>"
+                if node.content is not None:  # template contents
+                    frames.append((iter(node.content.children), False,
+                                   end_tag))
                 else:
-                    _serialize_node(child, out, scripting)
-        out.append("</")
-        out.append(node.name)
-        out.append(">")
-    elif isinstance(node, Text):
-        out.append(_escape_text(node.data))
-    elif isinstance(node, Comment):
-        out.append("<!--")
-        out.append(node.data)
-        out.append("-->")
-    elif isinstance(node, ProcessingInstruction):
-        out.append("<?")
-        out.append(node.target)
-        out.append(" ")
-        out.append(node.data)
-        out.append(">")
-    elif isinstance(node, DocumentType):
-        out.append("<!DOCTYPE ")
-        out.append(node.name)
-        out.append(">")
-    elif isinstance(node, (Document, DocumentFragment)):
-        for child in node.children:
-            _serialize_node(child, out, scripting)
+                    frames.append((iter(node.children),
+                                   node.namespace == HTML_NS and (
+                                       node.name in _RAWTEXT_PARENTS
+                                       or (node.name == "noscript"
+                                           and scripting)),
+                                   end_tag))
+                break
+            if isinstance(node, Text):
+                out.append(node.data if raw else _escape_text(node.data))
+            elif isinstance(node, Comment):
+                out.append("<!--")
+                out.append(node.data)
+                out.append("-->")
+            elif isinstance(node, ProcessingInstruction):
+                out.append("<?")
+                out.append(node.target)
+                out.append(" ")
+                out.append(node.data)
+                out.append(">")
+            elif isinstance(node, DocumentType):
+                out.append("<!DOCTYPE ")
+                out.append(node.name)
+                out.append(">")
+            elif isinstance(node, (Document, DocumentFragment)):
+                frames.append((iter(node.children), False, None))
+                break
+        else:
+            frames.pop()
+            if end is not None:
+                out.append(end)
 
 
 def serialize_inner(node: Node, scripting: bool = False) -> str:
     """innerHTML: serialize the children of ``node``."""
     out: list[str] = []
     if isinstance(node, Element) and node.content is not None:
-        for child in node.content.children:
-            _serialize_node(child, out, scripting)
+        _serialize_nodes(node.content.children, out, scripting)
     elif isinstance(node, (Element, Document, DocumentFragment)):
-        for child in node.children:
-            _serialize_node(child, out, scripting)
+        _serialize_nodes(node.children, out, scripting)
     return "".join(out)
 
 
 def serialize(node: Node, scripting: bool = False) -> str:
     """outerHTML: serialize ``node`` itself (documents serialize children)."""
     out: list[str] = []
-    _serialize_node(node, out, scripting)
+    _serialize_nodes((node,), out, scripting)
     return "".join(out)

@@ -194,19 +194,19 @@ def dedup_clusters(pairs: DataFrame, src: str = "doc_a",
 
 
 def dedup_representatives(pairs: DataFrame, docs: DataFrame,
-                          quality_col: str = "quality",
-                          algorithm: str = "label") -> DataFrame:
+                          quality_col: str = "quality") -> DataFrame:
     """Quality-aware canonical-document selection — the full-corpus
     keep-list a training pipeline actually materializes.
 
     ``dedup_clusters`` keeps each cluster's min-id document; real
     pipelines keep the *best* copy (longest text, highest quality
     score — the min-id copy is often the truncated or boilerplate
-    variant). This operator joins the component labels back onto the
-    whole corpus and picks, per cluster, the document maximizing
-    ``quality_col`` (ties broken by smallest ``doc_id`` — fully
-    deterministic, so re-runs produce byte-identical keep-lists, the
-    resumability property ``plans/pipeline.py`` relies on).
+    variant). This operator joins the min-label component labels
+    (``connected_components``) back onto the whole corpus and picks,
+    per cluster, the document maximizing ``quality_col`` (ties broken
+    by smallest ``doc_id`` — fully deterministic, so re-runs produce
+    byte-identical keep-lists, the resumability property
+    ``plans/pipeline.py`` relies on).
 
     Output: one row per **corpus** document (not just paired ones):
     ``(doc_id, cluster_id, rep_id, is_kept)``. Documents in no pair
@@ -226,13 +226,7 @@ def dedup_representatives(pairs: DataFrame, docs: DataFrame,
     """
     from pyspark.sql import Window
 
-    if algorithm == "star":
-        lab = connected_components_star(pairs)
-    elif algorithm == "label":
-        lab = connected_components(pairs)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}: "
-                         "expected 'label' or 'star'")
+    lab = connected_components(pairs)
     q = docs.select(F.col("doc_id").cast("long"),
                     F.col(quality_col).alias("_q"))
     w = Window.partitionBy("cluster_id").orderBy(

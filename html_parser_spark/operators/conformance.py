@@ -61,12 +61,9 @@ def _run_case(kind: str, payload: str) -> bool:
     return False
 
 
-def conformance_results(spark, num_partitions: int = 0):
+def conformance_results(spark):
     """DataFrame of (case_id, kind, passed) for every fixture case."""
-    rows = load_all_cases()
-    df = spark.createDataFrame(rows, schema=CASE_SCHEMA)
-    if num_partitions:
-        df = df.repartition(num_partitions)
+    df = spark.createDataFrame(load_all_cases(), schema=CASE_SCHEMA)
 
     def per_row(row):
         return [(bool(_run_case(row[1], row[2])),)]

@@ -186,7 +186,6 @@ def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
 
 
 def minhash_band_pairs(docs: DataFrame, n: int = 3,
-                       persist_signatures: bool = True,
                        max_band_freq: int | None = None) -> DataFrame:
     """LSH candidate pairs: same (band, band_key) for any of the 8
     bands of 2 rows; returns (doc_a, doc_b, n_matching_sigs).
@@ -194,9 +193,13 @@ def minhash_band_pairs(docs: DataFrame, n: int = 3,
     The signature table is referenced three times in this plan (band
     explode + both rejoin sides); without materialization Spark
     recomputes the md5-shingle aggregation for each reference, tripling
-    the dominant cost. ``persist_signatures`` caches it
-    (MEMORY_AND_DISK — 17 small columns per doc; at 10^12 docs you'd
-    write it to a table instead and share it across dedup runs).
+    the dominant cost. So it materializes once, by an eager
+    ``localCheckpoint`` (17 small columns per doc; at 10^12 docs you'd
+    write it to a table instead and share it across dedup runs) — not
+    ``persist()``, whose cached block stays pinned in the session's
+    cache manager until an unpersist no caller can safely issue; the
+    ContextCleaner releases checkpoint blocks once the frame is
+    garbage-collected.
 
     ``max_band_freq`` is the hot-bucket skew control for the 10^12-doc
     plan: a band bucket shared by more than that many documents (e.g.
@@ -205,9 +208,7 @@ def minhash_band_pairs(docs: DataFrame, n: int = 3,
     from the index before the self-join, bounding any join key's
     fan-out (same rationale as ``jaccard_pairs``' ``max_doc_freq``).
     Exact duplicates below the cap are unaffected."""
-    sigs = minhash_signatures(docs, n)
-    if persist_signatures:
-        sigs = sigs.persist()
+    sigs = minhash_signatures(docs, n).localCheckpoint(eager=True)
     bands = F.array(*[
         F.struct(F.lit(b).alias("band"),
                  (F.col(f"sig_{2 * b}") * P31 + F.col(f"sig_{2 * b + 1}"))
@@ -275,11 +276,15 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     Candidate generation is therefore an equi-join on
     ``(band_idx, band_value)`` — shuffle keyed on the band value,
     O(bands × docs) index rows — followed by an exact Hamming
-    post-filter. Results are identical to the all-pairs formulation.
+    post-filter. A pair can match in several bands; only the hit of its
+    lowest matching band survives the join, so each pair surfaces once
+    with no distinct (and no shuffle of the candidates). Results are
+    identical to the all-pairs formulation.
 
-    The fingerprint table feeds both join sides, so it is persisted
-    (same rationale as the MinHash signature table)."""
-    s = simhash(docs, bits).persist()
+    The fingerprint table feeds both join sides, so it materializes
+    once by an eager ``localCheckpoint`` (same rationale as the MinHash
+    signature table)."""
+    s = simhash(docs, bits).localCheckpoint(eager=True)
     n_bands = max_hamming + 1
     # ceil-split the bit range so every bit lands in exactly one band
     base = bits // n_bands
@@ -297,17 +302,19 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
                      F.col("bk.band").alias("band"),
                      F.col("bk.band_val").alias("band_val")))
     a, b = keyed.alias("a"), keyed.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
+    xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+    lowest = F.lit(True)  # this band is the pair's first exact match
+    for j in range(n_bands - 1):
+        lowest = lowest & ((F.col("a.band") <= j) | (
+            F.shiftright(xor, offs[j])
+            .bitwiseAND(F.lit((1 << widths[j]) - 1)) != 0))
+    ham = F.bit_count(xor)
+    return (a.join(b, (F.col("a.band") == F.col("b.band"))
                    & (F.col("a.band_val") == F.col("b.band_val"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")) & lowest)
+            .filter(ham <= max_hamming)
             .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                    F.col("a.simhash").alias("sh_a"),
-                    F.col("b.simhash").alias("sh_b"))
-            .distinct())
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (cand.filter(ham <= max_hamming)
-            .select("doc_a", "doc_b", ham.alias("hamming")))
+                    F.col("b.doc_id").alias("doc_b"), ham.alias("hamming")))
 
 
 def contamination_flags(train: DataFrame, benchmark: DataFrame,

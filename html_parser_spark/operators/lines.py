@@ -20,12 +20,10 @@ Scale shape (10^12 documents):
   lines. (``approx_count_distinct`` is the drop-in at extreme scale;
   exact is kept here so the DuckDB oracle pins values.)
 - the *banned* set (lines over the frequency threshold) is the
-  heavy-hitter minority of distinct lines — broadcast it
-  (``broadcast_banned=True``) and the line table is never exchanged
-  for the join at all. Total plan: ONE exchange to count frequencies +
-  ONE exchange to reassemble documents. With ``broadcast_banned=False``
-  the join falls back to a sort-merge equi-join on the hash for corpora
-  whose banned set outgrows the driver.
+  heavy-hitter minority of distinct lines — it is broadcast, so the
+  line table is never exchanged for the join at all. Total plan: ONE
+  exchange to count frequencies + ONE exchange to reassemble
+  documents.
 - reassembly is ``collect_list(struct(pos, line))`` + ``array_sort``
   per document — bounded by document size, no window function.
 
@@ -59,8 +57,7 @@ def line_doc_freq(lines: DataFrame, key_col: str = "url") -> DataFrame:
 
 
 def line_dedup(docs: DataFrame, key_col: str = "url",
-               text_col: str = "text", max_doc_freq: int = 2,
-               broadcast_banned: bool = True) -> DataFrame:
+               text_col: str = "text", max_doc_freq: int = 2) -> DataFrame:
     """Remove lines appearing in more than ``max_doc_freq`` distinct
     documents. Returns one row per input document:
 
@@ -73,9 +70,7 @@ def line_dedup(docs: DataFrame, key_col: str = "url",
     banned = (line_doc_freq(lines, key_col)
               .filter(F.col("df") > max_doc_freq)
               .select("h", F.lit(True).alias("_ban")))
-    if broadcast_banned:
-        banned = F.broadcast(banned)
-    flagged = lines.join(banned, "h", "left")
+    flagged = lines.join(F.broadcast(banned), "h", "left")
     keep = F.col("_ban").isNull()
     return (flagged.groupBy(key_col)
             .agg(F.count("*").cast("long").alias("n_lines"),

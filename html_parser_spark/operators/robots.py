@@ -17,9 +17,9 @@ Two pieces, split the way a production crawler splits them:
   per-url window, both expressible identically in the SQL oracle.
 
 Scale shape: the rules table is one row per (host, rule) — even at
-10^8 hosts it is dwarfed by a 10^12-url frontier, so the join is an
-equi-join on host (broadcast when the host set is small; sort-merge
-otherwise) and the window partitions by the frontier url, bounded by
+10^8 hosts it is dwarfed by a 10^12-url frontier, so the join is a
+broadcast equi-join on host (the frontier is never exchanged for it)
+and the window partitions by the frontier url, bounded by
 rules-per-host. The frontier never self-joins and page bodies are
 never touched.
 
@@ -91,8 +91,7 @@ def parse_robots_txt(robots_df: DataFrame, host_col: str = "host",
 
 
 def robots_filter(frontier_df: DataFrame, rules_df: DataFrame,
-                  url_col: str = "canon",
-                  broadcast_rules: bool = False) -> DataFrame:
+                  url_col: str = "canon") -> DataFrame:
     """Annotate every frontier url with its robots verdict.
 
     Longest-match REP semantics: among the host's rules whose prefix
@@ -115,10 +114,8 @@ def robots_filter(frontier_df: DataFrame, rules_df: DataFrame,
     annotated = (frontier_df.withColumn("_host", host)
                  .withColumn("_path", path)
                  .withColumn("_row", F.monotonically_increasing_id()))
-    rules = rules_df.select(F.col("host").alias("_host"),
-                            "rule", "prefix")
-    if broadcast_rules:
-        rules = F.broadcast(rules)
+    rules = F.broadcast(rules_df.select(F.col("host").alias("_host"),
+                                        "rule", "prefix"))
     # LEFT join on (host, prefix-match): a url whose host has no
     # matching rule keeps exactly one NULL-extended row, so the window
     # below sees every url exactly once or its full match set
@@ -143,8 +140,7 @@ def robots_filter(frontier_df: DataFrame, rules_df: DataFrame,
 
 def crawl_schedule(frontier_df: DataFrame, delays_df: DataFrame,
                    url_col: str = "canon",
-                   default_delay_s: int = 1,
-                   broadcast_delays: bool = False) -> DataFrame:
+                   default_delay_s: int = 1) -> DataFrame:
     """Politeness scheduling: assign each frontier url a per-host fetch
     slot and ETA honoring the host's crawl-delay — the step between the
     robots verdict and the fetcher queue.
@@ -159,17 +155,15 @@ def crawl_schedule(frontier_df: DataFrame, delays_df: DataFrame,
     internal delay column is underscore-scoped so a frontier carrying
     its own ``delay_s`` payload column is untouched).
 
-    Scale shape: one equi-join on host against the tiny delay table
-    (broadcast when bounded) and one per-host window. Per-host
-    scheduling is inherently sequential — that is the semantics, not a
-    plan defect — so the window sort is bounded by the largest single
-    host's frontier; a 10^12-url frontier spread over 10^8 hosts sorts
-    ~10^4 rows per partition key."""
+    Scale shape: one broadcast equi-join on host against the tiny
+    delay table and one per-host window. Per-host scheduling is
+    inherently sequential — that is the semantics, not a plan defect —
+    so the window sort is bounded by the largest single host's
+    frontier; a 10^12-url frontier spread over 10^8 hosts sorts ~10^4
+    rows per partition key."""
     host = F.regexp_extract(F.col(url_col), HOST_OF_RE, 1)
-    delays = delays_df.select("host",
-                              F.col("delay_s").alias("_delay_s"))
-    if broadcast_delays:
-        delays = F.broadcast(delays)
+    delays = F.broadcast(delays_df.select(
+        "host", F.col("delay_s").alias("_delay_s")))
     j = (frontier_df.withColumn("host", host)
          .join(delays, "host", "left")
          .withColumn("_delay_s", F.coalesce(F.col("_delay_s"),

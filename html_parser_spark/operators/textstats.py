@@ -139,8 +139,7 @@ def quality_flags(docs: DataFrame, min_words: int = 20,
             .withColumn("keep", keep))
 
 
-def rarity_stats(docs: DataFrame, rare_max_count: int = 2,
-                 broadcast_vocab: bool = False) -> DataFrame:
+def rarity_stats(docs: DataFrame, rare_max_count: int = 2) -> DataFrame:
     """Corpus unigram-frequency rarity features — the integer-exact
     stand-in for a CCNet-style LM-perplexity quality filter (a real
     KenLM scorer slots in as a pandas UDF over the same word stream;
@@ -155,20 +154,15 @@ def rarity_stats(docs: DataFrame, rare_max_count: int = 2,
 
     Scale shape: exchange words once to count the vocabulary (two-phase
     groupBy, map-side partial), then join the word stream back to the
-    counts. Default is the sort-merge equi-join on the token — honest
-    at web scale where the long-tail vocabulary (urls, typos) outgrows
-    the driver. ``broadcast_vocab=True`` is the fast path when the
-    vocabulary is bounded (code, curated corpora): the word stream is
-    then never exchanged for the join, leaving freq-exchange +
-    doc-reassembly-exchange, the same two-Exchange budget as
-    ``lines.line_dedup``. (The production middle ground — broadcast the
-    top-K head and treat misses as rare — changes results only at the
-    K boundary; kept out so the oracle stays exact.)"""
+    counts. The join carries no hint: the planner picks it by the
+    vocabulary's size, and a sort-merge equi-join on the token is the
+    honest plan at web scale, where the long-tail vocabulary (urls,
+    typos) outgrows the driver. (The production middle ground —
+    broadcast the top-K head and treat misses as rare — changes results
+    only at the K boundary; kept out so the oracle stays exact.)"""
     words = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w"))
     counts = words.groupBy("w").agg(F.count("*").cast("long").alias("cnt"))
-    if broadcast_vocab:
-        counts = F.broadcast(counts)
     return (words.join(counts, "w")
             .groupBy("doc_id")
             .agg(F.count("*").cast("long").alias("n_words"),
@@ -187,9 +181,7 @@ def _floor_log2(c) -> "F.Column":
     return (F.length(F.bin(c)) - 1).cast("long")
 
 
-def surprisal_stats(docs: DataFrame,
-                    broadcast_vocab: bool = False,
-                    key_col: str = "doc_id") -> DataFrame:
+def surprisal_stats(docs: DataFrame, key_col: str = "doc_id") -> DataFrame:
     """Unigram language-model surprisal per document, in exact integer
     bits — the CCNet/Gopher "perplexity filter" realized with a corpus
     self-trained LM instead of an external KenLM binary (a real KenLM
@@ -214,16 +206,13 @@ def surprisal_stats(docs: DataFrame,
     Scale shape (same budget as ``rarity_stats``): one exchange of the
     word stream to count the vocabulary (two-phase agg), the scalar
     corpus total reduced from the vocabulary table (never the raw
-    stream) and broadcast, then the word⋈vocab equi-join — sort-merge
-    by default because a web-scale long-tail vocabulary outgrows the
-    driver; ``broadcast_vocab=True`` when the vocabulary is bounded."""
+    stream) and broadcast, then the word⋈vocab equi-join, with no hint
+    (as in ``rarity_stats``)."""
     words = docs.select(
         key_col, F.explode(F.split(F.col("text"), " ")).alias("w"))
     counts = words.groupBy("w").agg(
         F.count("*").cast("long").alias("cnt"))
     total = counts.agg(F.sum("cnt").cast("long").alias("total"))
-    if broadcast_vocab:
-        counts = F.broadcast(counts)
     scored = (words.join(counts, "w")
               .crossJoin(F.broadcast(total))
               .withColumn("bits", _floor_log2(F.col("total"))
@@ -270,8 +259,7 @@ def plagiarism_pairs(docs: DataFrame, k: int = 8, w: int = 4,
             .filter(F.col("n_shared") >= min_shared))
 
 
-def tfidf_keywords(docs: DataFrame, k: int = 3,
-                   broadcast_vocab: bool = False) -> DataFrame:
+def tfidf_keywords(docs: DataFrame, k: int = 3) -> DataFrame:
     """Per-document keyword extraction: top-``k`` tokens by an
     integer-exact TF-IDF stand-in — ``score_ppm = 1_000_000 * tf DIV
     df`` (term frequency in the doc over the token's document
@@ -289,11 +277,10 @@ def tfidf_keywords(docs: DataFrame, k: int = 3,
     table (map-side partial agg; exchange carries per-partition
     DISTINCT (doc,token) pairs); df re-aggregates THAT table by token
     (a second vocabulary-bounded exchange, never the raw stream); the
-    tf⋈df equi-join stays a shuffle join by default (web-scale
-    vocabulary outgrows the driver — ``broadcast_vocab=True`` for
-    bounded vocabularies); the top-k window partitions by doc_id,
-    bounded by per-doc distinct tokens. No corpus text moves past the
-    first exchange.
+    tf⋈df equi-join carries no hint (as in ``rarity_stats``: a
+    web-scale vocabulary outgrows the driver); the top-k window
+    partitions by doc_id, bounded by per-doc distinct tokens. No corpus
+    text moves past the first exchange.
     """
     from pyspark.sql import Window
 
@@ -303,8 +290,6 @@ def tfidf_keywords(docs: DataFrame, k: int = 3,
           .agg(F.count("*").cast("long").alias("tf")))
     df = (tf.groupBy("token")
           .agg(F.count("*").cast("long").alias("df")))
-    if broadcast_vocab:
-        df = F.broadcast(df)
     scored = (tf.join(df, "token")
               .withColumn("score_ppm",
                           F.expr("1000000 * tf DIV df").cast("long")))

@@ -44,13 +44,16 @@ BIG_DOC_BYTES = 1 << 20  # 1 MiB: the giant-document size boundary
 def configure(builder_or_spark=None, cpus: int | None = None):
     """Build (or tune) a SparkSession for the extraction workload.
 
+    - ``local[cpus]``: ``cpus``, else ``SPARK_GRAFT_CPUS``, else the
+      cores this process may run on (what ``nproc`` reports).
     - Arrow batches capped at 64 docs and 4 MiB (cells are MB-scale: a
       one-wave giant partition would batch a dozen giants).
     - AQE on: runtime coalescing of the post-shuffle partitions.
     - ``files.maxPartitionBytes`` at 16 MB (see below); on Iceberg use
       the table's split size.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS") or 0) \
+        or len(os.sched_getaffinity(0))
     b = builder_or_spark or SparkSession.builder
     if isinstance(b, SparkSession):
         return b
@@ -79,8 +82,7 @@ def configure(builder_or_spark=None, cpus: int | None = None):
             .getOrCreate())
 
 
-def skew_isolate(pages: DataFrame, giant_partitions: int,
-                 big_doc_bytes: int = BIG_DOC_BYTES) -> DataFrame:
+def skew_isolate(pages: DataFrame, giant_partitions: int) -> DataFrame:
     """Shuffle only the skew tail (the default plan).
 
     Normal documents stay on their scan splits — with
@@ -101,9 +103,9 @@ def skew_isolate(pages: DataFrame, giant_partitions: int,
     be planned from file/row-group size metadata without a second pass.
     """
     h = F.xxhash64("url")
-    giants = (pages.filter(F.length("html") > big_doc_bytes)
+    giants = (pages.filter(F.length("html") > BIG_DOC_BYTES)
               .repartition(giant_partitions, h))
-    normal = pages.filter(F.length("html") <= big_doc_bytes)
+    normal = pages.filter(F.length("html") <= BIG_DOC_BYTES)
     return normal.unionByName(giants)
 
 
@@ -193,21 +195,22 @@ def incremental_extract(old: DataFrame, new: DataFrame,
 
 
 def run_extraction(spark: SparkSession, pages: DataFrame, output_path: str,
-                   num_partitions: int | None = None, resume: bool = True,
-                   with_spans: bool = True, plan: str = "isolate") -> dict:
+                   resume: bool = True, with_spans: bool = True,
+                   plan: str = "isolate") -> dict:
     """End-to-end job: resume-filter → skew-aware partitioning →
     extract → atomic append → run report. Returns the report dict.
 
-    ``plan``: "isolate" (default — shuffle only giant docs) or "none"
-    (trust scan splits). For url co-location downstream, write the
-    output with :func:`write_bucketed`.
+    ``plan``: "isolate" (default — shuffle only giant docs, into one
+    wave of ``defaultParallelism`` partitions) or "none" (trust scan
+    splits). For url co-location downstream, write the output with
+    :func:`write_bucketed`.
     """
     if plan not in ("isolate", "none"):
         raise ValueError(f"unknown plan {plan!r}")
     if resume:
         pages = resume_filter(pages, output_path)
-    parts = num_partitions or spark.sparkContext.defaultParallelism
-    parted = pages if plan == "none" else skew_isolate(pages, parts)
+    parted = pages if plan == "none" else skew_isolate(
+        pages, spark.sparkContext.defaultParallelism)
     # run_id tags the rows THIS run wrote; the committed table holds
     # earlier runs too (whole-table totals are a separate field)
     rid = uuid.uuid4().hex

@@ -10,6 +10,11 @@ Usage (cluster):
         --input <pages table path or name> --output <output path> \
         [--plan isolate|none] [--no-resume] [--spans]
 
+Partitioning: normal documents stay on their scan splits; with the
+default ``--plan isolate`` the documents over 1 MiB shuffle by url
+hash into one wave of giant partitions, one per core
+(``defaultParallelism``).
+
 Input modes (mutually exclusive): --input (pages parquet path or
 catalog table), --warc-input (parquet of (warc_id, warc binary) WARC
 blobs — record-walked into pages first), --synth (sandbox corpus
@@ -47,12 +52,12 @@ def main(argv: list[str] | None = None) -> int:
                           "into (url, warc_ts, html) before extraction")
     ap.add_argument("--output", required=True)
     ap.add_argument("--plan", default="isolate",
-                    choices=["isolate", "none"])
+                    choices=["isolate", "none"],
+                    help="isolate: documents over 1 MiB shuffle into one "
+                         "partition per core; none: scan splits only")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--spans", action="store_true",
                     help="emit element spans (larger output)")
-    ap.add_argument("--num-partitions", type=int, default=None,
-                    help="giant-doc partitions; default: one wave (1/core)")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -79,7 +84,6 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("one of --input/--synth/--warc-input is required")
 
     report = run_extraction(spark, pages, args.output,
-                            num_partitions=args.num_partitions,
                             resume=not args.no_resume,
                             with_spans=args.spans, plan=args.plan)
     print(json.dumps(report))

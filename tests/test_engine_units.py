@@ -152,6 +152,15 @@ class TestSerializer:
         twice = serialize(parse(once).document)
         assert once == twice
 
+    def test_nesting_deeper_than_the_recursion_limit(self):
+        out = serialize(parse(b"<div>" * 2000).document)
+        assert out == ("<html><head></head><body>" + "<div>" * 2000
+                       + "</div>" * 2000 + "</body></html>")
+        out = serialize(parse(b"<template><tr>" * 500 + b"x").document)
+        assert out.count("<template>") == out.count("</template>") == 500
+        assert out.count("<tr>") == out.count("</tr>") > 0
+        assert serialize(parse(out).document) == out
+
 
 class TestExtractor:
     def test_spans(self):

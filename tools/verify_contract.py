@@ -6,6 +6,8 @@ hash is type-sensitive: a DuckDB HUGEINT window-sum surfacing as
 decimal128 vs Spark's int64 hash-mismatches even when every value is
 identical — exactly the round-2 ``crawl_sessions`` failure mode).
 Usage: python tools/verify_contract.py [sf_dir] [query ...]
+Spark runs on ``SPARK_GRAFT_CPUS`` cores, else on every core this
+process may use (``configure``'s default).
 Exits non-zero on any failure or unknown query name; the last line is
 ``PASS n/m`` (queries passed / queries run)."""
 
@@ -80,7 +82,7 @@ def main() -> int:
         print(f"unknown queries: {', '.join(unknown)}")
         return 2
 
-    spark = configure(cpus=8)
+    spark = configure()
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
