@@ -11,11 +11,12 @@ DOM → output):
     serialize(Document)    -> html str                    # serializer.py
     extract_text(Document) -> (text, spans)               # extractor.py
 
-Use :func:`html_parser_spark.engine.parser.parse` for the one-call API.
+Use :func:`html_parser_spark.engine.parser.parse` for the one-call API
+(and ``parse_fragment`` for innerHTML-style fragments). The reference's
+``DOMParser``, ``Parser::parseInto`` and serializer options
+(pretty-printer) are not reproduced, per SURVEY.md §2.1 and §2.8.
 """
 
-from .parser import parse, parse_fragment, parse_into, Output  # noqa: F401
+from .parser import parse, parse_fragment, Output  # noqa: F401
 from .serializer import serialize, serialize_inner  # noqa: F401
 from .extractor import extract_text  # noqa: F401
-from .domparser import DOMParser  # noqa: F401
-from . import serializer_options  # noqa: F401  (configurable/pretty)

@@ -200,6 +200,10 @@ def from_meta_content(content: str) -> str | None:
 # Byte prescan ("prescan a byte stream to determine its encoding")
 # ---------------------------------------------------------------------------
 
+# the window the prescan and the XML-declaration scan read (parity:
+# the reference's default, /root/reference/lib/Parser/Config.php:15)
+PRESCAN_BYTES = 1024
+
 _B_WS_SLASH = b"\t\n\x0c\r /"
 _B_TAGEND_RE = re.compile(rb"[\t\n\x0c\r >]")
 
@@ -262,7 +266,7 @@ def _prescan_get_attribute(data: bytes, pos: int) -> tuple[str | None, str, int]
     return name.decode("ascii", "replace").lower(), value.decode("ascii", "replace"), pos
 
 
-def from_xml_declaration(data: bytes, scan_bytes: int = 1024) -> str | None:
+def from_xml_declaration(data: bytes) -> str | None:
     """"Get an XML encoding" fallback, run when the meta prescan fails:
     ``<?xml … encoding="label"?>`` at the very start of the stream
     (XHTML served as text/html).
@@ -272,7 +276,7 @@ def from_xml_declaration(data: bytes, scan_bytes: int = 1024) -> str | None:
     locating the ``encoding`` substring from the start of the window
     rather than inside the declaration.
     """
-    s = data[:scan_bytes]
+    s = data[:PRESCAN_BYTES]
     n = len(s)
     if not s.startswith(b"<?xml"):
         return None
@@ -306,23 +310,21 @@ def from_xml_declaration(data: bytes, scan_bytes: int = 1024) -> str | None:
     return enc
 
 
-def from_prescan(data: bytes, scan_bytes: int = 1024) -> str | None:
-    """Prescan the first ``scan_bytes`` for a <meta> declared encoding;
-    on failure fall back to the XML-declaration scan.
+def from_prescan(data: bytes) -> str | None:
+    """Prescan the first ``PRESCAN_BYTES`` for a <meta> declared
+    encoding; on failure fall back to the XML-declaration scan.
 
-    Parity: /root/reference/lib/Parser/Charset.php:132-293 (same default
-    1024-byte window as /root/reference/lib/Parser/Config.php:15); every
-    exit without a meta hit funnels to fromXMLDeclaration
-    (Charset.php:292).
+    Parity: /root/reference/lib/Parser/Charset.php:132-293; every exit
+    without a meta hit funnels to fromXMLDeclaration (Charset.php:292).
     """
-    enc = _prescan_meta(data, scan_bytes)
+    enc = _prescan_meta(data)
     if enc is not None:
         return enc
-    return from_xml_declaration(data, scan_bytes)
+    return from_xml_declaration(data)
 
 
-def _prescan_meta(data: bytes, scan_bytes: int) -> str | None:
-    data = data[:scan_bytes]
+def _prescan_meta(data: bytes) -> str | None:
+    data = data[:PRESCAN_BYTES]
     n = len(data)
     pos = 0
     while pos < n:
@@ -418,12 +420,11 @@ CERTAIN = True
 TENTATIVE = False
 
 
-def sniff(data: bytes, transport_charset: str | None = None,
-          fallback: str = "windows-1252", prescan_bytes: int = 1024) -> tuple[str, bool]:
-    """BOM > transport > prescan > fallback; returns (encoding, certain).
+def sniff(data: bytes, transport_charset: str | None = None) -> tuple[str, bool]:
+    """BOM > transport > prescan > windows-1252; returns (encoding, certain).
 
     Parity: the reference's ladder in /root/reference/lib/Parser/Data.php:59-95
-    with `encodingFallback` semantics (/root/reference/lib/Parser/Config.php:13).
+    with its default `encodingFallback` (/root/reference/lib/Parser/Config.php:13).
     """
     enc = from_bom(data)
     if enc:
@@ -437,10 +438,10 @@ def sniff(data: bytes, transport_charset: str | None = None,
             enc = from_transport(transport_charset)
     if enc:
         return enc, CERTAIN
-    enc = from_prescan(data, prescan_bytes)
+    enc = from_prescan(data)
     if enc:
         return enc, TENTATIVE
-    return fallback, TENTATIVE
+    return "windows-1252", TENTATIVE
 
 
 def decode(data: bytes, encoding: str) -> str:

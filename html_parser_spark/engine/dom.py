@@ -75,13 +75,7 @@ class Document(ParentNode):
 
 
 class DocumentFragment(ParentNode):
-    __slots__ = ("host",)
-
-    def __init__(self) -> None:
-        super().__init__()
-        # the template element owning this content fragment, if any
-        # (pretty-printer's hosted-vs-hostless distinction)
-        self.host: "Element | None" = None
+    __slots__ = ()
 
 
 class DocumentType(Node):
@@ -119,7 +113,6 @@ class Element(ParentNode):
         # spec model).
         if name == "template" and namespace == HTML_NS:
             self.content: DocumentFragment | None = DocumentFragment()
-            self.content.host = self
         else:
             self.content = None
 

@@ -56,8 +56,7 @@ def _parse_text(text: str, scripting: bool, meta_hook=None, pi: bool = False,
 
 
 def parse(data: bytes | str, transport_charset: str | None = None,
-          fallback: str = "windows-1252", scripting: bool = False,
-          prescan_bytes: int = 1024, pi: bool = False,
+          scripting: bool = False, pi: bool = False,
           track_positions: bool = False) -> Output:
     """Parse a full HTML document from raw bytes (or pre-decoded text).
 
@@ -70,7 +69,7 @@ def parse(data: bytes | str, transport_charset: str | None = None,
         return Output(doc, "utf-8", doc.quirks_mode, errors,
                       tb.n_tokens, tb.n_elements, positions, n_tok_err)
 
-    encoding, certain = charset.sniff(data, transport_charset, fallback, prescan_bytes)
+    encoding, certain = charset.sniff(data, transport_charset)
     for _attempt in range(2):
         text, n_decode_errors = charset.decode_count(data, encoding)
         changed: list[str] = []
@@ -109,30 +108,6 @@ def parse(data: bytes | str, transport_charset: str | None = None,
         return Output(doc, encoding, doc.quirks_mode, errors,
                       tb.n_tokens, tb.n_elements, positions, n_tok_err)
     raise AssertionError("unreachable: at most one encoding restart")
-
-
-def parse_into(data: bytes | str, document: Document,
-               transport_charset: str | None = None,
-               fallback: str = "windows-1252", scripting: bool = False,
-               prescan_bytes: int = 1024, pi: bool = False,
-               track_positions: bool = False) -> Output:
-    """Parse into a caller-supplied (empty) Document — the reference's
-    ``Parser::parseInto`` (/root/reference/lib/Parser.php:81-83).
-    The target must be empty (reference NON_EMPTY_DOCUMENT rule);
-    children, doctype and quirks mode are established on it and the
-    returned Output's ``document`` IS the supplied object."""
-    if document.children:
-        raise ValueError("parse_into target document must be empty")
-    out = parse(data, transport_charset, fallback, scripting,
-                prescan_bytes, pi, track_positions)
-    src = out.document
-    for child in list(src.children):
-        src.remove(child)
-        document.append(child)
-    document.doctype = src.doctype
-    document.quirks_mode = src.quirks_mode
-    out.document = document
-    return out
 
 
 def parse_fragment(data: bytes | str, context: str | Element,

@@ -842,6 +842,12 @@ class TreeBuilder:
             self.stack.insert(self.stack.index(furthest) + 1, clone)
 
     def _any_other_end_tag(self, name: str) -> None:
+        # no open HTML element of that name: the walk below would end
+        # at the first special element (at worst the ``html`` root)
+        # with this one error, after a scan of the whole stack
+        if name not in self.stack.counts:
+            self.error("unexpected-end-tag")
+            return
         for i in range(len(self.stack) - 1, -1, -1):
             node = self.stack[i]
             if node.namespace == HTML_NS and node.name == name:

@@ -1,8 +1,8 @@
 """Production entry point: spark-submit-able extraction job.
 
-Usage (cluster):
-    zip -r hps.zip html_parser_spark
-    spark-submit --py-files hps.zip \
+Usage (cluster, from the repo root):
+    sh tools/package.sh
+    spark-submit --py-files dist/hps.zip \
         --conf spark.sql.execution.arrow.maxRecordsPerBatch=64 \
         --conf spark.sql.execution.arrow.maxBytesPerBatch=4194304 \
         --conf spark.sql.files.maxPartitionBytes=16777216 \
@@ -20,8 +20,10 @@ catalog table), --warc-input (parquet of (warc_id, warc binary) WARC
 blobs — record-walked into pages first), --synth (sandbox corpus
 synthesis from a testdata dir).
 
-Usage (sandbox smoke, synthesizes pages from the test documents table):
-    python jobs/extract_job.py --synth /root/testdata/sf0.001 \
+Usage (sandbox smoke from the repo root, synthesizes pages from a
+testdata dir's documents table; nothing installs the package, so the
+repo root goes on ``PYTHONPATH``):
+    PYTHONPATH=. python jobs/extract_job.py --synth <testdata>/sf0.001 \
         --output /tmp/hps_out
 
 The job is idempotent/resumable: every run anti-joins the source

@@ -1,5 +1,4 @@
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(__file__))          # for `conformance`
 sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))  # repo root

@@ -7,7 +7,7 @@ trees; TestCharset.php:70-73 compares sniffed encodings)."""
 
 import pytest
 
-from conformance import (
+from html_parser_spark.conformance import (
     iter_fixture_files, load_encoding_cases, load_serializer_cases,
     load_tokenizer_cases, load_tree_cases, run_serializer_case,
     run_tokenizer_case, run_tree_case,
@@ -45,7 +45,7 @@ _TOKENIZER_ERROR_CASES = [c for c in _TOKENIZER_CASES if "errors" in c[1]]
 @pytest.mark.parametrize("cid,case,state", _TOKENIZER_ERROR_CASES,
                          ids=[c[0] for c in _TOKENIZER_ERROR_CASES])
 def test_tokenizer_error_codes(cid, case, state):
-    from conformance import run_tokenizer_errors
+    from html_parser_spark.conformance import run_tokenizer_errors
     actual, expected = run_tokenizer_errors(case, state)
     assert actual == expected, case["description"]
 

@@ -44,6 +44,11 @@ class TestCharset:
         enc, certain = charset.sniff(data, transport_charset="euc-kr")
         assert enc == "utf-16le" and certain
         assert "тест" in charset.decode(data, enc)
+        # without a BOM the transport charset beats the meta, as a bare
+        # label or as a Content-Type string
+        data = "<meta charset=koi8-r>Olé".encode("cp1252")
+        for transport in ("windows-1252", "text/html;charset=windows-1252"):
+            assert charset.sniff(data, transport) == ("windows-1252", True)
 
     def test_decode_replaces_invalid(self):
         assert charset.decode(b"a\xffb", "utf-8") == "a�b"
@@ -140,6 +145,23 @@ class TestSerializer:
         out = parse(f"<!DOCTYPE html><body>{html}")
         body = out.document.children[-1].children[-1]
         assert serialize_inner(body) == expected
+
+    @pytest.mark.parametrize("html,expected", [
+        ("<!DOCTYPE html><p class='x'>a<b>b</b></p><table><td>1</table>",
+         '<!DOCTYPE html><html><head></head><body><p class="x">a<b>b</b></p>'
+         "<table><tbody><tr><td>1</td></tr></tbody></table></body></html>"),
+        ("<svg><circle/></svg><math><mi>m</mi></math>",
+         "<html><head></head><body><svg><circle></circle></svg>"
+         "<math><mi>m</mi></math></body></html>"),
+        ("<template><p>t</p></template><script>a<b</script>",
+         "<html><head><template><p>t</p></template><script>a<b</script>"
+         "</head><body></body></html>"),
+        ("<pre>\n keep\n</pre><input disabled>",
+         "<html><head></head><body><pre> keep\n</pre>"
+         '<input disabled=""></body></html>'),
+    ], ids=["table", "foreign", "template", "pre"])
+    def test_document(self, html, expected):
+        assert serialize(parse(html).document) == expected
 
     def test_nbsp_escaped(self):
         out = parse("<!DOCTYPE html><body><p>a b")
@@ -336,94 +358,6 @@ class TestErrorRegistry:
             lits += _re.findall(r"code = [\"']([a-z0-9.-]+)[\"']", src)
             for c in lits:
                 assert c in ALL_CODES, c
-
-
-class TestDOMParser:
-    """text/html façade behaviors mirroring the reference's
-    TestDOMParser.php HTML rows (the XML branch is out of scope)."""
-
-    def _text(self, out):
-        return text_content(out.document)
-
-    def test_default_utf8_fallback(self):
-        from html_parser_spark.engine.domparser import DOMParser
-        out = DOMParser().parse_from_string("Olé".encode(), "text/html")
-        assert self._text(out) == "Olé"
-        assert out.encoding == "utf-8"
-
-    def test_charset_param(self):
-        from html_parser_spark.engine.domparser import DOMParser
-        out = DOMParser().parse_from_string(
-            "Olé".encode("cp1252"), "text/html;charset=windows-1252")
-        assert self._text(out) == "Olé"
-        assert out.encoding == "windows-1252"
-
-    def test_quoted_charset_param_and_label_alias(self):
-        from html_parser_spark.engine.domparser import DOMParser
-        out = DOMParser().parse_from_string(
-            "Olé".encode(), 'text/html; charset="utf8"')
-        assert self._text(out) == "Olé"
-        assert out.encoding == "utf-8"
-
-    def test_bom_beats_charset_param(self):
-        from html_parser_spark.engine.domparser import DOMParser
-        data = "﻿Olé".encode("utf-16le")
-        out = DOMParser().parse_from_string(
-            data, "text/html;charset=euc-kr")
-        assert self._text(out) == "Olé"
-        assert out.encoding == "utf-16le"
-
-    def test_meta_sniff_still_works(self):
-        from html_parser_spark.engine.domparser import DOMParser
-        out = DOMParser().parse_from_string(
-            "<meta charset=windows-1252>Olé".encode("cp1252"), "text/html")
-        assert self._text(out) == "Olé"
-
-    def test_xml_type_gated(self):
-        from html_parser_spark.engine.domparser import DOMParser
-        with pytest.raises(NotImplementedError):
-            DOMParser().parse_from_string(b"<html/>", "text/xml")
-        with pytest.raises(NotImplementedError):
-            DOMParser().parse_from_string(b"<svg/>", "image/svg+xml")
-
-    def test_invalid_type_rejected(self):
-        from html_parser_spark.engine.domparser import DOMParser
-        with pytest.raises(ValueError):
-            DOMParser().parse_from_string(b"x", "text/plain")
-        with pytest.raises(ValueError):
-            DOMParser().parse_from_string(b"x", "nonsense")
-
-
-class TestParseInto:
-    """Parser::parseInto parity (Parser.php:81; TestParser.php rows):
-    parse into a supplied empty Document; Content-Type strings accepted
-    as the transport encoding."""
-
-    def test_parse_into_supplied_document(self):
-        from html_parser_spark.engine import parse_into
-        from html_parser_spark.engine.dom import Document
-        d = Document()
-        out = parse_into("Olé".encode(), d,
-                         transport_charset="text/html; charset=utf8")
-        assert out.document is d
-        assert out.encoding == "utf-8"
-        assert text_content(d) == "Olé"
-        assert d.children and d.children[0].name == "html"
-
-    def test_parse_into_rejects_non_empty(self):
-        from html_parser_spark.engine import parse_into
-        from html_parser_spark.engine.dom import Document
-        d = Document()
-        parse_into(b"<p>x", d)
-        with pytest.raises(ValueError):
-            parse_into(b"<p>y", d)
-
-    def test_content_type_without_charset_ignored(self):
-        from html_parser_spark.engine import parse_into
-        from html_parser_spark.engine.dom import Document
-        out = parse_into(b"<p>x", Document(),
-                         transport_charset="text/html")
-        assert out.encoding == "windows-1252"  # fell through the ladder
 
 
 def test_single_eof_token_every_state():

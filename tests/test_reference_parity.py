@@ -20,7 +20,7 @@ import os
 
 import pytest
 
-import conformance as conf
+from html_parser_spark import conformance as conf
 from html_parser_spark.engine import charset
 
 REF = "/root/reference/tests/cases"

@@ -5,7 +5,7 @@ every other token through ``process``. These tests parse the same input
 with ``run()`` and with a plain ``for token in tokenize(): process(token)``
 loop and require the same tree, serialization, errors (with positions)
 and counters; and they pin the linear-time shapes that active-formatting
-reconstruction used to make quadratic."""
+reconstruction and unmatched end tags used to make quadratic."""
 
 from __future__ import annotations
 
@@ -16,9 +16,9 @@ import time
 
 import pytest
 
-from conformance import iter_fixture_files, load_tree_cases
 from test_engine_fuzz import _SNIPPETS
 
+from html_parser_spark.conformance import iter_fixture_files, load_tree_cases
 from html_parser_spark.engine import charset, parse
 from html_parser_spark.engine import tokenizer as tz
 from html_parser_spark.engine.dom import (
@@ -138,15 +138,11 @@ def _best_cpu(*inputs: bytes, rounds: int = 5) -> list[float]:
     return best
 
 
-@pytest.mark.parametrize("shape", [b"<b>x", b"<b><div>x"])
-def test_formatting_reconstruction_scales_linearly(shape):
-    """Each text token asks whether the last active formatting element
-    is still open. A scan of the open-element stack made these shapes
-    quadratic (``<b><div>x`` * 64,000: 147 s); the ``on_stack`` count
-    makes the test O(1). Linear code reads ~4 on a quiet host and a
-    quadratic one ≥12; a busy shared host pushes single readings past
-    6 now and then, so the best of three readings is compared."""
-    n = 16000
+def _assert_linear(shape: bytes, n: int) -> None:
+    """Parse CPU of ``shape`` * 4n over ``shape`` * n. Linear code reads
+    ~4 on a quiet host and a quadratic one ≥12; a busy shared host
+    pushes single readings past 6 now and then, so the best of three
+    readings is compared."""
     ratios = []
     for _ in range(3):
         small, large = _best_cpu(shape * n, shape * (4 * n))
@@ -154,3 +150,22 @@ def test_formatting_reconstruction_scales_linearly(shape):
         if ratios[-1] <= 6:
             break
     assert min(ratios) <= 6, ratios
+
+
+@pytest.mark.parametrize("shape", [b"<b>x", b"<b><div>x"])
+def test_formatting_reconstruction_scales_linearly(shape):
+    """Each text token asks whether the last active formatting element
+    is still open. A scan of the open-element stack made these shapes
+    quadratic (``<b><div>x`` * 64,000: 147 s); the ``on_stack`` count
+    makes the test O(1)."""
+    _assert_linear(shape, 16000)
+
+
+def test_end_tag_without_open_element_scales_linearly():
+    """An end tag whose name has no open element ("any other end tag"
+    in body) is a parse error and is ignored. Finding that out by
+    walking the stack down to a special element made this shape, whose
+    stack grows by eleven ``b`` per repeat, quadratic (a ratio of ~18
+    from n = 1,000 to 4,000); the stack's per-name counts answer it in
+    O(1)."""
+    _assert_linear(b"<b>" * 10 + b"<td><b>x</td>", 1000)
