@@ -636,13 +636,25 @@ def _q_dedup_exact(spark, sf_dir):
     return dedup.exact_dedup_groups(_docs(spark, sf_dir))
 
 
+def _pages_twice(spark, sf_dir):
+    """The pages with every document twice, under distinct urls (suffix
+    ``?c=0`` / ``?c=1``) and identical html: a crawl with exact
+    duplicates for the dedup compositions. The replication is a
+    Catalyst ``explode`` (JVM-side), so only the parse pays per copy."""
+    return (pages_df(spark, sf_dir)
+            .withColumn("c", F.explode(F.sequence(F.lit(0), F.lit(1))))
+            .withColumn("url", F.concat(F.col("url"), F.lit("?c="),
+                                        F.col("c").cast("string")))
+            .drop("c"))
+
+
 def _q_dedup_exact_extracted(spark, sf_dir):
     """Composition: synthesize pages with 2 copies per doc (distinct
     urls, identical html) → real WHATWG parse+extract → exact dedup on
     the *extracted* text. Every group must collapse to exactly 2 copies
     (expected texts embed the doc_id, so cross-doc collisions can't
     happen)."""
-    pages = pages_df(spark, sf_dir, copies=2)
+    pages = _pages_twice(spark, sf_dir)
     out = extract_pages(pages, with_spans=False)
     return (out.groupBy(F.md5(F.col("text").cast("binary")).alias("k"))
             .agg(F.min("url").alias("kept_url"),
@@ -802,7 +814,7 @@ def _q_curation_pipeline(spark, sf_dir):
     *extracted* text (keep smallest url) → quality filter (≥200 chars
     of extracted text). DuckDB independently predicts the surviving
     url set from the closed-form expected text."""
-    pages = pages_df(spark, sf_dir, copies=2)
+    pages = _pages_twice(spark, sf_dir)
     out = extract_pages(pages, with_spans=False)
     kept = (out.groupBy(F.md5(F.col("text").cast("binary")).alias("k"))
             .agg(F.min("url").alias("kept_url"),
@@ -823,7 +835,7 @@ def _q_curation_quota(spark, sf_dir):
     any corpus size. DuckDB independently predicts the surviving
     (site, url, rank) set from the closed-form expected text."""
     from html_parser_spark.operators import sampling
-    pages = pages_df(spark, sf_dir, copies=2)
+    pages = _pages_twice(spark, sf_dir)
     out = extract_pages(pages, with_spans=False).select("url", "text")
     dedup = (out.groupBy(F.md5(F.col("text").cast("binary")).alias("k"))
              .agg(F.min("url").alias("url"),
@@ -835,12 +847,10 @@ def _q_curation_quota(spark, sf_dir):
 
 
 def _q_crawl_window_stats(spark, sf_dir):
-    """Tumbling-window crawl stats over warc_ts — the batch twin of
-    the watermarked streaming aggregation (same function builds both;
-    tests/test_streaming.py asserts the drained stream equals this).
-    warc_ts is sha256-derived from the url, so DuckDB recomputes the
-    exact windows."""
-    from html_parser_spark.streaming.windowed import crawl_window_counts
+    """6-hour tumbling-window crawl stats over warc_ts. warc_ts is
+    sha256-derived from the url, so DuckDB recomputes the exact
+    windows."""
+    from html_parser_spark.operators.crawl_time import crawl_window_counts
     return (crawl_window_counts(pages_df(spark, sf_dir))
             .select("window_start", "n_docs"))
 
@@ -860,11 +870,9 @@ _SESSION_GAP_S = 604_800  # 7 days: ~15 sessions/source at sf0.01
 
 
 def _q_crawl_sessions(spark, sf_dir):
-    """Gap-based sessionization (batch twin of the
-    applyInPandasWithState streaming operator in streaming/sessions.py;
-    tests/test_streaming.py pins stream==batch). Window-function
-    Catalyst plan; source recovered from the url path."""
-    from html_parser_spark.streaming.sessions import batch_sessions
+    """Gap-based sessionization: a window-function Catalyst plan
+    (operators/crawl_time.py); source recovered from the url path."""
+    from html_parser_spark.operators.crawl_time import batch_sessions
     pages = pages_df(spark, sf_dir)
     src = pages.withColumn(
         "source", F.regexp_extract("url", r"example\.org/([^/]+)/", 1))

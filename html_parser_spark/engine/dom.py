@@ -30,6 +30,18 @@ QUIRKS = 1
 LIMITED_QUIRKS = 2
 
 
+def child_index(children: list, ref: "Node") -> int:
+    """Position of ``ref`` in ``children``, searched from the end. The
+    only reference node the tree builder inserts before is the table
+    that foster parenting moves content out of, almost always at or
+    near the end of its parent's children; a search from the front made
+    repeated tables (``<table>x`` * n) parse in quadratic time."""
+    for i in range(len(children) - 1, -1, -1):
+        if children[i] is ref:
+            return i
+    raise ValueError("reference node is not a child")
+
+
 class Node:
     __slots__ = ("parent",)
 
@@ -56,7 +68,7 @@ class ParentNode(Node):
             child.parent = self
             self.children.append(child)
         else:
-            idx = self.children.index(ref)
+            idx = child_index(self.children, ref)
             child.parent = self
             self.children.insert(idx, child)
 

@@ -26,6 +26,7 @@ from .dom import (
     HTML_NS, MATHML_NS, SVG_NS, XLINK_NS, XMLNS_NS,
     LIMITED_QUIRKS, NO_QUIRKS, QUIRKS,
     Comment, Document, DocumentType, Element, ProcessingInstruction, Text,
+    child_index,
 )
 
 # XML 1.0 5e Name production (BMP only — mirrors the reference's
@@ -621,7 +622,7 @@ class TreeBuilder:
         if before is None:
             prev = children[-1] if children else None
         else:
-            idx = children.index(before)
+            idx = child_index(children, before)
             prev = children[idx - 1] if idx > 0 else None
         if isinstance(prev, Text):
             # coalescing matters for byte-identical extraction

@@ -91,28 +91,17 @@ def resolve_anchors(doc: Document, base_url: str,
 
 def extract_links(pages_df: DataFrame,
                   max_html_bytes: int = 64 * 1024 * 1024,
-                  max_links_per_doc: int = 10_000,
-                  passthrough_cols: tuple[str, ...] = ()) -> DataFrame:
+                  max_links_per_doc: int = 10_000) -> DataFrame:
     """pages(url, html, ...) -> one row per ``<a href>``:
-    (url, href, target, anchor[, passthrough...]). ``target`` is the
-    href resolved against the page url (RFC 3986); all schemes pass
-    through — apply :func:`http_links` for the crawl-frontier subset.
-    Column pruning: only (url, html) + ``passthrough_cols`` reach the
-    kernel, and ``passthrough_cols`` are replicated onto each anchor
-    row (e.g. the crawl timestamp for streaming watermarks). A page
-    that fails to parse contributes zero link rows."""
-    schema = LINKS_SCHEMA
-    if passthrough_cols:
-        by_name = {f.name: f for f in pages_df.schema.fields}
-        schema += "".join(
-            f", {c} {by_name[c].dataType.simpleString()}"
-            for c in passthrough_cols)
-
+    (url, href, target, anchor). ``target`` is the href resolved
+    against the page url (RFC 3986); all schemes pass through — apply
+    :func:`http_links` for the crawl-frontier subset. Column pruning:
+    only (url, html) reach the kernel. A page that fails to parse
+    contributes zero link rows."""
     def per_doc(url, raw, row):
         return resolve_anchors(parse(raw).document, url, max_links_per_doc)
 
-    return _map_pages(pages_df, schema, per_doc,
-                      extra_cols=tuple(passthrough_cols),
+    return _map_pages(pages_df, LINKS_SCHEMA, per_doc,
                       max_html_bytes=max_html_bytes)
 
 

@@ -267,18 +267,11 @@ def _synthesize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
 DOCS_PER_PARTITION = 500
 
 
-def pages_df(spark, sf_dir: str, copies: int = 1):
+def pages_df(spark, sf_dir: str):
     """documents.parquet -> pages DataFrame (distributed synthesis),
     hashed on ``doc_id`` into ``defaultParallelism`` partitions, fewer
-    when the table has under ``DOCS_PER_PARTITION`` documents a core.
-
-    ``copies > 1`` replicates every document under distinct urls (path
-    suffix ``/c{i}``) with identical html — a deterministic corpus
-    scale-up used by the bench and by dedup demos. The replication is a
-    Catalyst ``explode`` (JVM-side), so only the parse pays per-copy.
-    """
+    when the table has under ``DOCS_PER_PARTITION`` documents a core."""
     import pyarrow.dataset as ds
-    from pyspark.sql import functions as F
 
     path = f"{sf_dir}/documents.parquet"
     n_docs = ds.dataset(path).count_rows()  # footers only, no Spark job
@@ -288,11 +281,4 @@ def pages_df(spark, sf_dir: str, copies: int = 1):
                                            "source")
     if parts > 1:  # else keep the scan split: no shuffle for one task
         docs = docs.repartition(parts, "doc_id")
-    pages = docs.mapInPandas(_synthesize_batches, schema=PAGES_SCHEMA)
-    if copies > 1:
-        pages = (pages
-                 .withColumn("c", F.explode(F.sequence(F.lit(0), F.lit(copies - 1))))
-                 .withColumn("url", F.concat(F.col("url"), F.lit("?c="),
-                                             F.col("c").cast("string")))
-                 .drop("c"))
-    return pages
+    return docs.mapInPandas(_synthesize_batches, schema=PAGES_SCHEMA)

@@ -955,10 +955,9 @@ def test_curation_quota_pipeline_exchange_budget(spark):
     shuffles. The quality gate must not add joins/shuffles of its own
     (it is a single withColumns pass)."""
     import __spark_entry__ as e
-    from html_parser_spark.sources.pages import pages_df
 
     out = e.queries()["curation_quota_pipeline"](spark, SF_DIR)
-    src = pages_df(spark, SF_DIR, copies=2)
+    src = e._pages_twice(spark, SF_DIR)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert (_plan_count(out, "Exchange hashpartitioning")
             - _plan_count(src, "Exchange hashpartitioning")) == 3, plan

@@ -169,3 +169,13 @@ def test_end_tag_without_open_element_scales_linearly():
     from n = 1,000 to 4,000); the stack's per-name counts answer it in
     O(1)."""
     _assert_linear(b"<b>" * 10 + b"<td><b>x</td>", 1000)
+
+
+@pytest.mark.parametrize("shape", [b"<table>x", b"<table><b>x"])
+def test_foster_parenting_scales_linearly(shape):
+    """Foster parenting inserts before the table it moves content out
+    of. Each repeat here adds a table to the same parent, so finding
+    that table from the front of the parent's children made these
+    shapes quadratic (a ratio of ~15 from n = 4,000 to 16,000); it
+    sits at or near the end, where the search now starts."""
+    _assert_linear(shape, 4000)
