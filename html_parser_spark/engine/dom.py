@@ -13,9 +13,16 @@ performance, /root/reference/lib/Parser.php:27-41).
 Attributes are stored in an insertion-ordered dict. Keys are either a plain
 ``str`` (no namespace — the common HTML case) or a ``(prefix, local, ns)``
 tuple for namespaced attributes created by foreign-content adjustment.
+
+A node holds its parent through a weak reference (``_parent``, read as
+the ``parent`` property), so a parsed tree holds no reference cycle:
+reference counting frees it as soon as its last user drops it, with no
+help from the cyclic collector.
 """
 
 from __future__ import annotations
+
+from weakref import ref
 
 HTML_NS = "http://www.w3.org/1999/xhtml"
 MATHML_NS = "http://www.w3.org/1998/Math/MathML"
@@ -30,51 +37,56 @@ QUIRKS = 1
 LIMITED_QUIRKS = 2
 
 
-def child_index(children: list, ref: "Node") -> int:
-    """Position of ``ref`` in ``children``, searched from the end. The
+def child_index(children: list, node: "Node") -> int:
+    """Position of ``node`` in ``children``, searched from the end. The
     only reference node the tree builder inserts before is the table
     that foster parenting moves content out of, almost always at or
     near the end of its parent's children; a search from the front made
     repeated tables (``<table>x`` * n) parse in quadratic time."""
     for i in range(len(children) - 1, -1, -1):
-        if children[i] is ref:
+        if children[i] is node:
             return i
     raise ValueError("reference node is not a child")
 
 
 class Node:
-    __slots__ = ("parent",)
+    __slots__ = ("_parent",)
 
-    parent: "Node | None"
+    _parent: "ref[ParentNode] | None"
+
+    @property
+    def parent(self) -> "ParentNode | None":
+        p = self._parent
+        return None if p is None else p()
 
 
 class ParentNode(Node):
-    __slots__ = ("children",)
+    __slots__ = ("children", "__weakref__")
 
     def __init__(self) -> None:
-        self.parent = None
+        self._parent = None
         self.children: list[Node] = []
 
     def append(self, child: Node) -> None:
-        if child.parent is not None:
-            child.parent.remove(child)
-        child.parent = self
+        old = child.parent
+        if old is not None:
+            old.remove(child)
+        child._parent = ref(self)
         self.children.append(child)
 
-    def insert_before(self, child: Node, ref: Node | None) -> None:
-        if child.parent is not None:
-            child.parent.remove(child)
-        if ref is None:
-            child.parent = self
+    def insert_before(self, child: Node, before: Node | None) -> None:
+        old = child.parent
+        if old is not None:
+            old.remove(child)
+        child._parent = ref(self)
+        if before is None:
             self.children.append(child)
         else:
-            idx = child_index(self.children, ref)
-            child.parent = self
-            self.children.insert(idx, child)
+            self.children.insert(child_index(self.children, before), child)
 
     def remove(self, child: Node) -> None:
         self.children.remove(child)
-        child.parent = None
+        child._parent = None
 
 
 class Document(ParentNode):
@@ -94,7 +106,7 @@ class DocumentType(Node):
     __slots__ = ("name", "public_id", "system_id")
 
     def __init__(self, name: str, public_id: str, system_id: str) -> None:
-        self.parent = None
+        self._parent = None
         self.name = name
         self.public_id = public_id
         self.system_id = system_id
@@ -106,7 +118,7 @@ class Element(ParentNode):
     def __init__(self, name: str, namespace: str = HTML_NS, attrs: dict | None = None) -> None:
         # fields inlined (no super() chain): Element construction is one
         # of the hottest allocation sites in the parse
-        self.parent = None
+        self._parent = None
         self.children = []
         self.name = name
         self.namespace = namespace
@@ -136,7 +148,7 @@ class Text(Node):
     __slots__ = ("data",)
 
     def __init__(self, data: str) -> None:
-        self.parent = None
+        self._parent = None
         self.data = data
 
 
@@ -144,7 +156,7 @@ class Comment(Node):
     __slots__ = ("data",)
 
     def __init__(self, data: str) -> None:
-        self.parent = None
+        self._parent = None
         self.data = data
 
 
@@ -152,7 +164,7 @@ class ProcessingInstruction(Node):
     __slots__ = ("target", "data")
 
     def __init__(self, target: str, data: str) -> None:
-        self.parent = None
+        self._parent = None
         self.target = target
         self.data = data
 

@@ -23,6 +23,13 @@ The tree builder switches ``self.state`` for RCDATA/RAWTEXT/script/PLAINTEXT
 (feedback channel 1 of SURVEY.md §3.4) and supplies ``cdata_ok`` so CDATA
 sections are only honored in foreign content (feedback channel 2; parity:
 /root/reference/lib/Parser/Tokenizer.php:2074).
+
+The generator is not the only reader of the data state. After the
+generator yields a START or END token it resumes by re-reading ``pos``
+and ``state``, so from there ``TreeBuilder.run``'s direct lane matches
+``_DATA_CHUNK`` on ``s`` itself and builds the clean text pieces and bare
+tags that follow, keeping ``pos`` and ``last_start_tag`` exactly as this
+generator would; it hands back to the generator at anything else.
 """
 
 from __future__ import annotations
@@ -56,12 +63,13 @@ _ESCAPED_RUN = re.compile(r"[^<\x00-]+")
 _TAGNAME_RUN = re.compile(r"[^\t\n\f />]+")
 # data-state fused fast path: one C-level match consumes a clean text
 # run AND, when one follows immediately, a complete bare `<name>` /
-# `</name>` (no attrs, no solidus) — the dominant byte shape of
-# text-heavy html. Anything else (charref, NUL, tag with attributes,
+# `</name>` (no attrs, no solidus, no NUL) — the dominant byte shape
+# of text-heavy html. Anything else (charref, NUL, tag with attributes,
 # markup declaration) falls back to the general per-state dispatch.
 # Group 1 never admits '<', so the optional tag group cannot backtrack
 # into it.
-_DATA_CHUNK = re.compile(r"([^&<\x00]*)(?:<(/?)([a-zA-Z][^\t\n\f />]*)>)?")
+_DATA_CHUNK = re.compile(
+    r"([^&<\x00]*)(?:<(/?)([a-zA-Z][^\t\n\f />\x00]*)>)?")
 _ATTRNAME_RUN = re.compile(r"[^\t\n\f /=>]+")
 _ATTRVAL_DQ = re.compile(r'[^"&\x00]+')
 _ATTRVAL_SQ = re.compile(r"[^'&\x00]+")
@@ -80,6 +88,14 @@ _BAD_BMP_RE = re.compile(
 _BAD_ASTRAL_RE = re.compile(
     "[" + "".join(chr(0x10000 * p + o) for p in range(1, 17)
                   for o in (0xFFFE, 0xFFFF)) + "]")
+# the members of _BAD_BMP_RE's class an ASCII string can hold: deleting
+# them with bytes.translate runs several times faster than the regex
+# search, so an ASCII string is checked slice by slice and only a slice
+# that shrinks is searched with the regex. Bounded slices keep the
+# encoded copies small on multi-MB pages.
+_BAD_ASCII = (bytes(range(0x01, 0x09)) + b"\x0b" + bytes(range(0x0e, 0x20))
+              + b"\x7f")
+_SCAN_CHUNK = 1 << 16
 _BOGUS_RUN = re.compile(r"[^>\x00]+")
 _ALPHA_RUN = re.compile(r"[A-Za-z]+")
 _ENTITY_CANDIDATE = re.compile(r"[A-Za-z][A-Za-z0-9]{0,40}")
@@ -142,6 +158,12 @@ def positions_from_offsets(s: str, codes: list[str],
     return out
 
 
+def no_cdata() -> bool:
+    """The default ``cdata_ok`` probe: a ``<![CDATA[`` outside foreign
+    content is a bogus comment."""
+    return False
+
+
 class Tokenizer:
     """Generator-based tokenizer over a decoded, CR-normalized string."""
 
@@ -163,7 +185,7 @@ class Tokenizer:
         self.pos = 0
         self.state = initial_state
         self.last_start_tag = last_start_tag
-        self.cdata_ok = lambda: False
+        self.cdata_ok = no_cdata
         self.errors: list[str] = []
         # line/col tracking is debug/conformance-only, mirroring the
         # reference's gating (no position bookkeeping without an error
@@ -287,21 +309,29 @@ class Tokenizer:
     def _scan_input_stream(self) -> None:
         """Input-stream preprocessing errors (WHATWG §13.2.3.5;
         reference Data.php character checks): surrogates,
-        noncharacters, and controls other than NUL/whitespace. One
-        C-level BMP regex search on the clean path (the overwhelmingly
-        common case); the astral-noncharacter class is consulted only
-        when the CPython compact-str width shows the string can hold
-        astral characters at all (a UCS-1/2 string provably cannot)."""
+        noncharacters, and controls other than NUL/whitespace. An ASCII
+        string is checked with ``bytes.translate`` over bounded slices
+        and only a slice holding a bad byte is searched with the regex;
+        any other string gets one C-level BMP regex search on the clean
+        path. The astral-noncharacter class is consulted only when the
+        CPython compact-str width shows the string can hold astral
+        characters at all (a UCS-1/2 string provably cannot)."""
         s = self.s
         if not s:
             return
         hits = []
-        if _BAD_BMP_RE.search(s) is not None:
-            hits = list(_BAD_BMP_RE.finditer(s))
-        if not s.isascii() and sys.getsizeof(s) >= 4 * len(s):
-            astral = list(_BAD_ASTRAL_RE.finditer(s))
-            if astral:
-                hits = sorted(hits + astral, key=lambda m: m.start())
+        if s.isascii():
+            for i in range(0, len(s), _SCAN_CHUNK):
+                b = s[i:i + _SCAN_CHUNK].encode("ascii")
+                if len(b.translate(None, _BAD_ASCII)) != len(b):
+                    hits += _BAD_BMP_RE.finditer(s, i, i + _SCAN_CHUNK)
+        else:
+            if _BAD_BMP_RE.search(s) is not None:
+                hits = list(_BAD_BMP_RE.finditer(s))
+            if sys.getsizeof(s) >= 4 * len(s):
+                astral = list(_BAD_ASTRAL_RE.finditer(s))
+                if astral:
+                    hits = sorted(hits + astral, key=lambda m: m.start())
         for m in hits:
             o = ord(m.group())
             if 0xD800 <= o <= 0xDFFF:
@@ -342,7 +372,7 @@ class Tokenizer:
                         else:
                             buf.append(piece)
                     pos += len(piece)
-                    if raw is not None and "\x00" not in raw:
+                    if raw is not None:
                         # fused bare-tag hit: token built here, no
                         # _tag_name call, no attribute loop. lt_pos
                         # (the '<') is where self.pos must sit while

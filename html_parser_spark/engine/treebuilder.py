@@ -7,8 +7,10 @@ adoption-agency algorithm, active-formatting-elements reconstruction with
 the Noah's Ark clause, foster parenting, the in-table-text pending buffer,
 template contents, and foreign (SVG/MathML) content rules.
 
-The tree builder *pulls* tokens from the tokenizer generator and feeds
-state back through the four channels catalogued in SURVEY.md §3.4:
+The tree builder *pulls* tokens from the tokenizer generator, or reads
+the data state's clean text and bare tags straight from the source in
+``run``'s direct lane, and feeds state back through the four channels
+catalogued in SURVEY.md §3.4:
 tokenizer state switches for RCDATA/RAWTEXT/script/PLAINTEXT, the
 ``cdata_ok`` probe of the adjusted current node, the next-token LF-skip
 for pre/listing/textarea (realized as an ignore-next-LF flag, which is
@@ -21,6 +23,7 @@ from __future__ import annotations
 
 from . import tokenizer as tz
 import re as _re
+from weakref import ref
 
 from .dom import (
     HTML_NS, MATHML_NS, SVG_NS, XLINK_NS, XMLNS_NS,
@@ -87,6 +90,11 @@ _INLINE_FORMATTING = FORMATTING - frozenset(("a", "nobr"))
 # (closes an open <p>), False for inline formatting (joins the AFE)
 _LANE_START = {**dict.fromkeys(_INLINE_FORMATTING, False),
                **dict.fromkeys(BLOCK_START, True)}
+# end tags TreeBuilder.run pops itself when they close the current node:
+# for a current node of their own name, mode_in_body's rule for each is
+# exactly one pop (implied end tags stop at that node, no error fires)
+_LANE_END = BLOCK_END | frozenset(
+    ("p", "li", "dd", "dt", "h1", "h2", "h3", "h4", "h5", "h6"))
 MARKER = object()  # active-formatting-elements marker sentinel
 
 CHARS, NULLS, START, END, COMMENT, DOCTYPE, EOF = (
@@ -250,106 +258,167 @@ class TreeBuilder:
     def run(self) -> Document:
         if self.fragment_context is not None:
             self._setup_fragment()
-        n = 0
+        tokenizer = self.tokenizer
+        src = tokenizer.s
+        src_len = tokenizer.n
+        data_chunk = tz._DATA_CHUNK.match
+        data_state = tz.DATA
+        lower_get = tz._LOWER_CACHE.get  # cleared, never rebound
         process = self.process  # bind once: ~145k lookups per MB saved
-        in_body_start = self._in_body_start
-        in_body_end = self._in_body_end
         stack = self.stack
         counts = stack.counts
         afe = self.afe
         no_context = self.fragment_context is None
-        # enumerate keeps the token count in C instead of a per-token
-        # `n += 1` bytecode pair
-        for n, token in enumerate(self.tokenizer.tokenize(), 1):
-            # in-body fast lane: the dominant token shapes of a page
-            # body, handled here instead of through process →
-            # mode_in_body → _in_body_start → insert_start_tag →
-            # insert_element → create_element. It applies exactly where
-            # process would pick mode_in_body's HTML rules with no LF
-            # skip pending, no foster parenting and no template
-            # contents as the insertion target; each branch does what
-            # that path does for its token. Every other token goes
-            # through process, the one general path.
-            if (self.mode == IN_BODY and stack and not self.ignore_lf
-                    and not self.foster):
-                cur = stack[-1]
-                if (cur.namespace == HTML_NS and cur.name != "template"
-                        and (no_context or len(stack) > 1)):
+        tag_kinds = (START, END)
+        # in-body fast lane: the dominant token shapes of a page body,
+        # handled here instead of through process → mode_in_body →
+        # _in_body_start → insert_start_tag → insert_element →
+        # create_element. It applies exactly where process would pick
+        # mode_in_body's HTML rules with no LF skip pending, no foster
+        # parenting and no template contents as the insertion target;
+        # each branch does what that path does for its token. Every
+        # other token goes through process, the one general path, and
+        # only process changes the mode and the two flags of ``lane``.
+        lane = (self.mode == IN_BODY and not self.ignore_lf
+                and not self.foster)
+        # enumerate counts the generator's tokens in C; ``direct``
+        # counts those read straight from the source (below)
+        n = direct = 0
+        tag = None  # a bare tag read behind a direct text piece
+        tag_end = 0
+        try:
+            for n, token in enumerate(tokenizer.tokenize(), 1):
+                while True:
                     kind = token[0]
-                    if kind == CHARS:
-                        data = token[1]
-                        if "\x00" not in data:
-                            if afe:
-                                self.reconstruct_afe()
-                                cur = stack[-1]
-                            children = cur.children
-                            if children and type(children[-1]) is Text:
-                                children[-1].data += data
-                            else:
-                                t = Text(data)
-                                t.parent = cur
-                                children.append(t)
-                            if (self.frameset_ok
-                                    and _NONWS_RE.search(data) is not None):
-                                self.frameset_ok = False
-                            continue
-                    elif kind == START:
-                        name = token[1]
-                        block = _LANE_START.get(name)
-                        if token[3]:
-                            pass  # self-closing: process acknowledges it
-                        elif block is not None:
-                            if block:
-                                if ("p" in counts
-                                        and self._in_scope("p", SCOPE_BUTTON)):
-                                    self.close_p()
-                                    cur = stack[-1]
-                                    if (cur.name == "template"
-                                            and cur.namespace == HTML_NS
-                                            and cur.content is not None):
-                                        cur = cur.content
-                            elif afe:
-                                self.reconstruct_afe()
-                                cur = stack[-1]
-                            attrs = token[2]
-                            el = Element(name, HTML_NS, attrs)
-                            el.parent = cur
-                            cur.children.append(el)
-                            _list_append(stack, el)
-                            el.on_stack = 1
-                            counts[name] = counts.get(name, 0) + 1
-                            self.n_elements += 1
-                            if not block:
-                                self.push_afe(el, name, attrs)
-                            continue
-                        else:
-                            token = in_body_start(token)
-                            if token is None:
-                                continue
-                    elif kind == END:
-                        name = token[1]
-                        if name == cur.name and (
-                                name == "p" or (
-                                    name in FORMATTING and afe
-                                    and afe[-1] is not MARKER
-                                    and afe[-1].element is cur)):
-                            _list_pop(stack)
-                            cur.on_stack -= 1
-                            k = counts[name] - 1
-                            if k:
-                                counts[name] = k
-                            else:
-                                del counts[name]
-                            if name != "p":
-                                afe.pop()
-                            continue
-                        token = in_body_end(token)
-                        if token is None:
-                            continue
-            process(token)
-            if self.done:
-                break
-        self.n_tokens = n
+                    if lane and stack:
+                        cur = stack[-1]
+                        if (cur.namespace == HTML_NS
+                                and cur.name != "template"
+                                and (no_context or len(stack) > 1)):
+                            if kind == CHARS:
+                                data = token[1]
+                                if "\x00" not in data:
+                                    if afe:
+                                        self.reconstruct_afe()
+                                        cur = stack[-1]
+                                    children = cur.children
+                                    if (children
+                                            and type(children[-1]) is Text):
+                                        children[-1].data += data
+                                    else:
+                                        t = Text(data)
+                                        t._parent = ref(cur)
+                                        children.append(t)
+                                    if (self.frameset_ok
+                                            and _NONWS_RE.search(data)
+                                            is not None):
+                                        self.frameset_ok = False
+                                    token = None
+                            elif kind == START:
+                                name = token[1]
+                                block = _LANE_START.get(name)
+                                # a self-closing tag goes to process,
+                                # which acknowledges it
+                                if block is not None and not token[3]:
+                                    if block:
+                                        if ("p" in counts and self._in_scope(
+                                                "p", SCOPE_BUTTON)):
+                                            self.close_p()
+                                            cur = stack[-1]
+                                            if (cur.name == "template"
+                                                    and cur.namespace == HTML_NS
+                                                    and cur.content is not None):
+                                                cur = cur.content
+                                    elif afe:
+                                        self.reconstruct_afe()
+                                        cur = stack[-1]
+                                    attrs = token[2]
+                                    el = Element(name, HTML_NS, attrs)
+                                    el._parent = ref(cur)
+                                    cur.children.append(el)
+                                    _list_append(stack, el)
+                                    el.on_stack = 1
+                                    counts[name] = counts.get(name, 0) + 1
+                                    self.n_elements += 1
+                                    if not block:
+                                        self.push_afe(el, name, attrs)
+                                    token = None
+                            elif kind == END:
+                                name = token[1]
+                                if name == cur.name and (
+                                        name in _LANE_END or (
+                                            name in FORMATTING and afe
+                                            and afe[-1] is not MARKER
+                                            and afe[-1].element is cur)):
+                                    _list_pop(stack)
+                                    cur.on_stack -= 1
+                                    k = counts[name] - 1
+                                    if k:
+                                        counts[name] = k
+                                    else:
+                                        del counts[name]
+                                    if name in FORMATTING:
+                                        afe.pop()
+                                    token = None
+                    if token is not None:
+                        # EOF is the one token that ends the parse, and
+                        # the generator ends after it
+                        process(token)
+                        lane = (self.mode == IN_BODY and not self.ignore_lf
+                                and not self.foster)
+                    # Direct lane. After a START or END token the
+                    # generator is paused where resuming re-reads
+                    # tokenizer.pos and .state, so while the state is
+                    # DATA the next clean text piece and bare tag are
+                    # read here with the generator's own match and
+                    # bookkeeping: the same tokens, pos (at the '<'
+                    # while the text is processed, which tree errors
+                    # read) and last_start_tag. A text piece followed
+                    # by '&', NUL or EOF is left to the generator, so a
+                    # CHARS token that spans a character reference stays
+                    # one token; so is any '<' that is not a bare tag,
+                    # once the text before it is consumed.
+                    if tag is not None:
+                        token, tag = tag, None
+                        tokenizer.pos = tag_end
+                        continue
+                    if kind not in tag_kinds or tokenizer.state != data_state:
+                        break
+                    pos = tokenizer.pos
+                    m = data_chunk(src, pos)
+                    piece, slash, raw = m.groups()
+                    if raw is None:
+                        if not piece:
+                            break
+                        pos += len(piece)
+                        if pos >= src_len or src[pos] != "<":
+                            break
+                        token = (CHARS, piece)
+                        tokenizer.pos = pos
+                        direct += 1
+                        continue
+                    name = lower_get(raw) or tz._lower(raw)
+                    if slash:
+                        tag = (END, name)
+                    else:
+                        tokenizer.last_start_tag = name
+                        tag = (START, name, {}, False)
+                    if piece:
+                        token = (CHARS, piece)
+                        tokenizer.pos = pos + len(piece)
+                        tag_end = m.end()
+                        direct += 2
+                    else:
+                        token, tag = tag, None
+                        tokenizer.pos = m.end()
+                        direct += 1
+        finally:
+            # the bound _cdata_ok is the tokenizer's one reference back
+            # to this builder: dropping it leaves the parse's objects
+            # without a reference cycle, so they are freed as soon as
+            # the caller drops them
+            tokenizer.cdata_ok = tz.no_cdata
+        self.n_tokens = n + direct
         return self.doc
 
     def _setup_fragment(self) -> None:
@@ -582,8 +651,9 @@ class TreeBuilder:
                 parent, before = self.stack[0], None
             else:
                 table = self.stack[last_table_i]
-                if table.parent is not None:
-                    parent, before = table.parent, table
+                parent = table.parent
+                if parent is not None:
+                    before = table
                 else:
                     parent, before = self.stack[last_table_i - 1], None
         else:
@@ -612,7 +682,7 @@ class TreeBuilder:
                 # inlined append: a fresh Text never has a parent, so
                 # the generic reparent check is dead weight here
                 t = Text(data)
-                t.parent = parent
+                t._parent = ref(parent)
                 children.append(t)
             return
         parent, before = self.appropriate_place(override)
@@ -818,20 +888,23 @@ class TreeBuilder:
                 node = clone
                 if last_node is furthest:
                     bookmark = node_afe_i + 1
-                if last_node.parent is not None:
-                    last_node.parent.remove(last_node)
                 node.append(last_node)
                 last_node = node
                 node_i = self.stack.index(node)
-            if last_node.parent is not None:
-                last_node.parent.remove(last_node)
+            # detached before the appropriate place is found: last_node
+            # may be the table that foster parenting looks up
+            parent = last_node.parent
+            if parent is not None:
+                parent.remove(last_node)
             parent, before = self.appropriate_place(common_ancestor)
             parent.insert_before(last_node, before)
             clone = self.create_element(fmt_entry.name, dict(fmt_entry.attrs))
-            while furthest.children:
-                child = furthest.children[0]
-                furthest.remove(child)
-                clone.append(child)
+            # all of furthest's children move in one step: one at a time
+            # from the front made an adoption over k children O(k^2)
+            clone.children, furthest.children = furthest.children, []
+            clone_ref = ref(clone)
+            for child in clone.children:
+                child._parent = clone_ref
             furthest.append(clone)
             fmt_i = self.afe_index_of(fmt)
             if fmt_i != -1:
@@ -1334,8 +1407,9 @@ class TreeBuilder:
             if (len(self.stack) > 1 and self.stack[1].name == "body"
                     and self.stack[1].namespace == HTML_NS and self.frameset_ok):
                 second = self.stack[1]
-                if second.parent is not None:
-                    second.parent.remove(second)
+                parent = second.parent
+                if parent is not None:
+                    parent.remove(second)
                 del self.stack[1:]
                 self.insert_start_tag(token)
                 self.mode = IN_FRAMESET

@@ -57,31 +57,15 @@ def minhash_term(i: int, h_expr: str) -> str:
     return f"(({MINHASH_A[i]} * (({h_expr}) % {P31}) + {MINHASH_B[i]}) % {P31})"
 
 
-def base_hash_col(col):
-    """Column form of ``base_hash(s)`` (md5 hex chars 1-15 → int64);
-    same recipe as spark_base_hash/duckdb_base_hash — keep all three
-    in lockstep."""
-    from pyspark.sql import functions as F
-    return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15),
-                  16, 10).cast("long")
-
-
-def base_hash2_col(col):
-    """Second independent 60-bit hash: md5 hex chars 16-30. Pairing it
-    with ``base_hash_col`` gives 120-bit join keys for operators where
-    a truncated-hash collision would be DESTRUCTIVE (substring dedup
-    removes text on key equality) rather than merely a candidate to
-    verify."""
-    from pyspark.sql import functions as F
-    return F.conv(F.substring(F.md5(col.cast("binary")), 16, 15),
-                  16, 10).cast("long")
-
-
 DUCKDB_BASE_HASH2 = "(('0x' || substring(md5({expr}), 16, 15))::bigint)"
 
 
 def duckdb_base_hash2(expr: str) -> str:
-    """DuckDB twin of ``base_hash2_col``."""
+    """DuckDB SQL text of a second independent 60-bit hash: md5 hex
+    chars 16-30. Paired with ``duckdb_base_hash`` it gives the 120-bit
+    keys of operators where a truncated-hash collision would be
+    destructive (substring dedup removes text on key equality) rather
+    than merely a candidate to verify."""
     return DUCKDB_BASE_HASH2.format(expr=expr)
 
 

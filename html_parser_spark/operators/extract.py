@@ -41,17 +41,23 @@ Scale notes (100 TB / 10^12 docs):
   schema has ``truncated`` and ``html_bytes`` columns the cut is
   flagged and the parsed size reported.
 - **GC per batch, not per allocation, over the batch's objects only.**
-  The DOM has parent↔child cycles, so the cyclic collector would
-  otherwise run continuously during parse. The driver disables it for
-  its generator's lifetime and runs one ``gc.collect()`` after each
-  yielded batch (the garbage is bounded: one batch's DOMs). A full
-  collection would also scan the worker's whole long-lived heap
+  A parsed DOM holds no reference cycle (a node's parent is a weak
+  reference), so reference counting frees each document's tree as soon
+  as its row is done. The collector still stays off for the driver's
+  generator's lifetime: parsing allocates millions of objects, and the
+  collections those allocations trigger cost ~7 % of the parse CPU.
+  One ``gc.collect()`` after each yielded batch frees whatever cycles
+  are left, a bounded share per batch. The engine leaves none (on bare
+  pandas, ``extract_pages``' collections find nothing); the collection
+  bounds what the worker's other libraries, an operator's own helpers
+  or a later change may leave, for well under a millisecond a batch.
+  A full collection would also scan the worker's whole long-lived heap
   (pyspark, pandas, pyarrow, the engine's module state) on every
   batch, so the driver freezes (``gc.freeze()``) what is alive when
   its first batch starts: each collection then scans only what the
-  generator made since. When the generator closes it unfreezes what
-  it froze and re-enables the collector. A caller whose heap is
-  already frozen keeps it frozen; the driver then freezes nothing.
+  generator made since. When the generator closes it unfreezes what it
+  froze and re-enables the collector. A caller whose heap is already
+  frozen keeps it frozen; the driver then freezes nothing.
 - **Counters, not lists.** Parse errors become per-doc counts (summed
   by the run report); full error tuples never leave the executor
   (the reference gates error collection the same way for performance —
@@ -158,12 +164,14 @@ def _row_kernel(schema: str, per_row, fail: tuple | None = None):
     instead, or no row when ``fail`` is None: one bad row never fails
     the task.
 
-    GC: the collector is off while the generator lives, and one
-    ``gc.collect()`` runs after each yielded batch. When it starts, the
-    generator freezes the heap that is alive (``gc.freeze()``, only if
-    nothing is frozen yet), so those collections scan only the objects
-    made since: the batches' DOMs and frames. Closing the generator
-    unfreezes what it froze and re-enables the collector.
+    GC: the collector is off while the generator lives, since the
+    collections a batch's allocations would trigger cost ~7 % of its
+    parse CPU; reference counting frees each parsed tree, and one
+    ``gc.collect()`` after each yielded batch frees any cycle made
+    outside the engine. When it starts, the generator freezes the
+    heap that is alive (``gc.freeze()``, only if nothing is frozen yet),
+    so those collections scan only the objects made since. Closing the
+    generator unfreezes what it froze and re-enables the collector.
 
     In a Spark task (a ``TaskContext`` exists), closing the generator
     also drops the worker's cached zipimporters

@@ -55,9 +55,8 @@ def _matched_starts(docs: DataFrame, k: int, n_keep: int) -> DataFrame:
     keeps per-doc state at O(n_keep) regardless of how pathological a
     document's duplication is."""
     grams = gram_array_col(F.col("text"), k)
-    # one md5 per gram, split into the two 60-bit halves (an
-    # arrays_zip of base_hash_col/base_hash2_col transforms would
-    # digest every gram twice)
+    # one md5 per gram, split into the two 60-bit halves (hashing
+    # each half in its own transform would digest every gram twice)
     md5s = F.transform(grams, lambda s: F.md5(s.cast("binary")))
     keys = F.transform(
         md5s,

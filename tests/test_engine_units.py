@@ -569,3 +569,69 @@ class TestExtractTables:
 
     def test_no_tables(self):
         assert self._cells(b"<p>plain paragraph</p>") == []
+
+
+def _regex_scan(s: str) -> tuple[list[str], list[int]]:
+    """Input-stream errors as one whole-string regex search finds them
+    (the scan before ASCII strings were checked slice by slice)."""
+    import sys
+    from html_parser_spark.engine import tokenizer as tz
+    hits = list(tz._BAD_BMP_RE.finditer(s))
+    if not s.isascii() and sys.getsizeof(s) >= 4 * len(s):
+        hits = sorted(hits + list(tz._BAD_ASTRAL_RE.finditer(s)),
+                      key=lambda m: m.start())
+    codes = []
+    for m in hits:
+        o = ord(m.group())
+        if 0xD800 <= o <= 0xDFFF:
+            codes.append("surrogate-in-input-stream")
+        elif 0xFDD0 <= o <= 0xFDEF or (o & 0xFFFE) == 0xFFFE:
+            codes.append("noncharacter-in-input-stream")
+        else:
+            codes.append("control-character-in-input-stream")
+    return codes, [m.start() for m in hits]
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_input_stream_scan_matches_whole_string_regex(seed):
+    """The ASCII scan works on bounded slices: a bad byte at either
+    edge of a slice, in the short last slice, or nowhere must give the
+    codes and offsets of the whole-string regex search. Non-ASCII
+    strings (latin-1, BMP noncharacters and lone surrogates, astral)
+    take the regex path and are checked alike."""
+    import random
+    from html_parser_spark.engine import tokenizer as tz
+
+    def scan(s):
+        t = tz.Tokenizer(s, track_positions=True)
+        t._scan_input_stream()
+        return t.errors, t.offsets
+
+    rng = random.Random(seed)
+    chunk = tz._SCAN_CHUNK
+    bad = [chr(c) for c in range(0x80) if tz._BAD_BMP_RE.match(chr(c))]
+    assert len(bad) == 28
+    n = 3 * chunk + rng.randrange(1, chunk)
+    base = rng.choices("abc <>&/=\"'\n\t\x00\x0c", k=n)
+    edges = [0, n - 1] + [k * chunk + d for k in (1, 2, 3) for d in (-1, 0)]
+    cases = ["".join(base)]
+    for i, ch in enumerate(bad):
+        chars = list(base)
+        chars[edges[i] if i < len(edges) else rng.randrange(n)] = ch
+        cases.append("".join(chars))
+    chars = list(base)
+    for at in edges:
+        chars[at] = rng.choice(bad)
+    for ch in bad:
+        chars[rng.randrange(n)] = ch
+    cases.append("".join(chars))
+    for extra in ("\xe9\x85\x9f\xa0", "\ufdd0\ufffe\uffff\ud800x\udfff",
+                  "\U0001fffe\U0010ffff\U0001f600\x7f"):
+        chars = list(base)
+        for ch in extra:
+            chars[rng.randrange(n)] = ch
+        cases.append("".join(chars))
+    for s in cases:
+        codes, offsets = scan(s)
+        assert (codes, offsets) == _regex_scan(s)
+    assert scan("")[0] == [] and scan("".join(base))[0] == []

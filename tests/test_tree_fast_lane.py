@@ -13,18 +13,20 @@ import gc
 import os
 import random
 import time
+import weakref
 
 import pytest
 
 from test_engine_fuzz import _SNIPPETS
 
 from html_parser_spark.conformance import iter_fixture_files, load_tree_cases
-from html_parser_spark.engine import charset, parse
+from html_parser_spark.engine import charset, parse, parse_fragment
 from html_parser_spark.engine import tokenizer as tz
 from html_parser_spark.engine.dom import (
     HTML_NS, MATHML_NS, SVG_NS, Element, to_test_tree)
+from html_parser_spark.engine.extractor import extract_body_text
 from html_parser_spark.engine.serializer import serialize
-from html_parser_spark.engine.treebuilder import TreeBuilder
+from html_parser_spark.engine.treebuilder import _LANE_END, TreeBuilder
 
 _TREE_CASES = [
     c for path in iter_fixture_files("tree-construction", ".dat")
@@ -87,9 +89,47 @@ def test_run_matches_process_loop_on_tree_fixtures(case):
     "<p>a<div/>b<b/>c</b>d",
     # NUL in body text
     "<p>a\x00b<b>c\x00</b>",
+    # the direct lane's hand-backs: a tag name with NUL, a tag with
+    # attributes, a character reference, an unclosed tag at EOF
+    "<p>a<b\x00c>d</p>", "<p>text<a href=x>y</a>z", "<p>a&amp;b</p>c",
+    "<p>abc</p", "<P>A</P>b<DIV>c",
+    # tokenizer state switches and the LF skip right after a bare tag
+    "<p><title>a<b>c</title>d", "<p><script>a<b>c</script>d",
+    "<p><plaintext>a<b>c", "<pre>\nx</pre>", "<textarea>\nx</textarea>y",
+    # end tags the lane pops itself, and the same names when they do
+    # not close the current node
+    "<div>a</div><ul><li>b</li></ul><dl><dd>c</dd></dl><h2>d</h2>",
+    "<div><span>a</div>b", "<h2>a</h1>b", "<li><p>a</li>b", "</pre>x",
+    # bare tags read while the lane is off: tables, foreign content
+    "<table><tr><td>a<b>c</b></td></tr></table>",
+    "<svg><g>a</g><![CDATA[x]]></svg><p>b",
 ])
 def test_run_matches_process_loop_on_lane_edges(text):
     _assert_same(text)
+
+
+@pytest.mark.parametrize("name", sorted(_LANE_END))
+def test_lane_end_tags_close_the_current_node_with_one_pop(name):
+    """``run()`` pops the current node itself for an end tag in
+    ``_LANE_END`` that closes it. The general in-body rule for that tag
+    must do exactly that and nothing else: no error, and the formatting
+    list, form pointer, mode and flags untouched."""
+    t = tz.Tokenizer(f"<!DOCTYPE html><body><{name}>")
+    tb = TreeBuilder(t)
+    for token in t.tokenize():
+        if token[0] == tz.EOF:
+            break
+        tb.process(token)
+    tb.ignore_lf = False  # <pre>/<listing> set it; the lane requires it off
+    assert tb.stack[-1].name == name
+
+    def state():
+        return (list(tb.stack), list(tb.afe), tb.form, tb.mode,
+                tb.frameset_ok, tb.foster, list(tb.errors))
+
+    before = state()
+    tb.process((tz.END, name))
+    assert state() == (before[0][:-1],) + before[1:]
 
 
 def test_run_matches_process_loop_on_fuzz_snippets():
@@ -103,20 +143,55 @@ def test_run_matches_process_loop_on_fuzz_snippets():
                      context=contexts[i % len(contexts)])
 
 
-def test_run_matches_process_loop_on_generated_pages():
+def _generated_pages() -> list[bytes]:
+    """150 seeded pages of the benchmark corpus's generator, without
+    the multi-MB giants (they repeat one paragraph's markup)."""
     import pyarrow.parquet as pq
 
     from html_parser_spark.sources.pages import build_page, rep_factor
 
     rows = [r for r in pq.read_table(
         _DOCUMENTS, columns=["doc_id", "text", "lang", "source"]).to_pylist()
-        # the multi-MB giants repeat one paragraph's markup; leave them
-        # out to keep the test fast
         if rep_factor(r["doc_id"]) < 2000]
-    for r in random.Random(11).sample(rows, 150):
-        raw = build_page(r["doc_id"], r["text"], r["lang"], r["source"])[2]
+    return [build_page(r["doc_id"], r["text"], r["lang"], r["source"])[2]
+            for r in random.Random(11).sample(rows, 150)]
+
+
+def test_run_matches_process_loop_on_generated_pages():
+    for raw in _generated_pages():
         text = charset.decode(raw, charset.sniff(raw)[0])
         _assert_same(text)
+
+
+def test_parsed_trees_hold_no_reference_cycle():
+    """A parse leaves no reference cycle: a node reaches its parent
+    through a weak reference, and ``run()`` drops the tokenizer's
+    ``cdata_ok`` back-reference to the tree builder. So reference
+    counting frees every tree as soon as it is dropped, and the
+    per-batch collection of ``operators.extract`` finds nothing of the
+    engine's. A new cycle (a bound method or closure kept on a parse
+    object) fails here instead of showing up as RSS drift."""
+    pages = _generated_pages()
+    rng = random.Random(7)
+    snippets = [b"".join(rng.choice(_SNIPPETS)
+                         for _ in range(rng.randint(1, 30)))
+                for _ in range(300)]
+    contexts = ["div", "template", "table", "svg foreignObject", "math mi"]
+    gc.collect()
+    gc.disable()
+    try:
+        for raw in pages + snippets:
+            extract_body_text(parse(raw).document)
+        for i, data in enumerate(snippets):
+            parse_fragment(data, contexts[i % len(contexts)])
+        found = gc.collect()
+    finally:
+        gc.enable()
+    assert found == 0
+    out = parse(pages[0])
+    doc = weakref.ref(out.document)
+    del out
+    assert doc() is None
 
 
 def _best_cpu(*inputs: bytes, rounds: int = 5) -> list[float]:
@@ -138,14 +213,16 @@ def _best_cpu(*inputs: bytes, rounds: int = 5) -> list[float]:
     return best
 
 
-def _assert_linear(shape: bytes, n: int) -> None:
-    """Parse CPU of ``shape`` * 4n over ``shape`` * n. Linear code reads
-    ~4 on a quiet host and a quadratic one ≥12; a busy shared host
-    pushes single readings past 6 now and then, so the best of three
-    readings is compared."""
+def _assert_linear(shape: bytes, n: int, prefix: bytes = b"",
+                   suffix: bytes = b"") -> None:
+    """Parse CPU of ``shape`` * 4n over ``shape`` * n, each between
+    ``prefix`` and ``suffix``. Linear code reads ~4 on a quiet host and
+    a quadratic one ≥12; a busy shared host pushes single readings past
+    6 now and then, so the best of three readings is compared."""
     ratios = []
     for _ in range(3):
-        small, large = _best_cpu(shape * n, shape * (4 * n))
+        small, large = _best_cpu(prefix + shape * n + suffix,
+                                 prefix + shape * (4 * n) + suffix)
         ratios.append(large / small)
         if ratios[-1] <= 6:
             break
@@ -179,3 +256,12 @@ def test_foster_parenting_scales_linearly(shape):
     shapes quadratic (a ratio of ~15 from n = 4,000 to 16,000); it
     sits at or near the end, where the search now starts."""
     _assert_linear(shape, 4000)
+
+
+def test_adoption_agency_scales_linearly():
+    """The adoption agency moves all of the furthest block's children
+    to the formatting element's clone. Moving them one at a time from
+    the front of the list made an adoption over k children O(k^2) (a
+    ratio of ~11 from n = 20,000 to 80,000); the list now moves in one
+    step."""
+    _assert_linear(b"x<i></i>", 20000, prefix=b"<a><div>", suffix=b"</a>")
